@@ -1,0 +1,38 @@
+package perfbench
+
+/** Minimal JSON rendering for the run's result and trace files. */
+object Json {
+
+  /** Already-rendered JSON, embedded as is. */
+  final case class Raw(s: String)
+
+  def str(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  def value(v: Any): String = v match {
+    case Raw(s) => s
+    case null | None => "null"
+    case Some(x) => value(x)
+    case s: String => str(s)
+    case b: Boolean => b.toString
+    case d: Double =>
+      if (d.isNaN || d.isInfinite) "null" else java.lang.Double.toString(d)
+    case f: Float => value(f.toDouble)
+    case n: Int => n.toString
+    case n: Long => n.toString
+    case m: Map[_, _] =>
+      obj(m.toSeq.map { case (k, x) => k.toString -> x }: _*)
+    case xs: Iterable[_] => xs.map(value).mkString("[", ",", "]")
+    case other => str(other.toString)
+  }
+
+  def obj(kv: (String, Any)*): String =
+    kv.map { case (k, v) => str(k) + ":" + value(v) }.mkString("{", ",", "}")
+}
