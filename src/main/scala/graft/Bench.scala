@@ -40,6 +40,20 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
+  /** Wall seconds of `run`, or None when it throws: a failed query
+    * never turns into a timing number. */
+  private[graft] def timed(run: => Any): Option[Double] = {
+    val t0 = System.nanoTime()
+    try { run; Some((System.nanoTime() - t0) / 1e9) }
+    catch { case _: Throwable => None }
+  }
+
+  private def jsonMap(xs: Seq[(String, Double)]): String =
+    xs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+
+  private def jsonList(xs: Seq[String]): String =
+    xs.map("\"" + _ + "\"").mkString("[", ",", "]")
+
   private[graft] def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
     if (s.isEmpty) 0.0
@@ -247,23 +261,21 @@ object Bench {
 
     // the canary rides BETWEEN timed queries (never inside a timing
     // window) and is excluded from `results`/totals — it only
-    // witnesses within-run contention for the drift heal (r13)
+    // witnesses within-run contention for the drift heal
     val canaryFn = SparkEntry.queries.get("q01_pricing")
     val canaryTimes = scala.collection.mutable.ArrayBuffer[Double]()
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).zipWithIndex
+    val timings = SparkEntry.queries.toSeq.sortBy(_._1).zipWithIndex
       .map { case ((name, fn), i) =>
         if (i % 30 == 0) canaryFn.foreach { cf =>
-          val c0 = System.nanoTime()
-          val ok = try { cf(spark, sfDir).count(); true }
-            catch { case _: Throwable => false }
-          if (ok) canaryTimes += (System.nanoTime() - c0) / 1e9
+          canaryTimes ++= timed(cf(spark, sfDir).count())
         }
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        name -> (System.nanoTime() - t0) / 1e9
+        name -> timed(fn(spark, sfDir).count())
       }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    // a query that throws is listed in `failed` and left out of every
+    // per-query map and total
+    val failed = timings.collect { case (k, None) => k }
+    val results = timings.collect { case (k, Some(v)) => k -> v }
+    val qs = jsonMap(results)
     val total = results.map(_._2).sum
     // Environment attribution (round-6 ask): BENCH_DETAIL records WHO
     // ran and HOW LOADED the host was, so a 2x swing between the
@@ -349,60 +361,49 @@ object Bench {
     val inflatedAll = healCandidates(results, medians,
       loadContaminated = loadStart > 3.0,
       driftContaminated = driftContaminated)
+    // a failed re-run (OOM recovery, transient error) keeps the raw time
     val healed: Map[String, Double] =
       if (inflatedAll.isEmpty) Map.empty
       else inflatedAll.flatMap { k =>
-        val t0 = System.nanoTime()
-        // a FAILED re-run (OOM recovery, transient error) must keep
-        // the raw time — recording the time-to-throw would silently
-        // deflate healed_total with a bogus fast "measurement"
-        val ok =
-          try { SparkEntry.queries(k)(spark, sfDir).count(); true }
-          catch { case _: Throwable => false }
-        if (ok) Some(k -> (System.nanoTime() - t0) / 1e9) else None
+        timed(SparkEntry.queries(k)(spark, sfDir).count()).map(k -> _)
       }.toMap
     val healedTotal = results.map { case (k, v) =>
       math.min(v, healed.getOrElse(k, v))
     }.sum
-    val healedQs = healed.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    // Cold-path witness (r14 item 4, additive, default OFF): with
-    // SPARK_GRAFT_COLD=1 a SECOND loop times every query after evicting
-    // every SessionCache memo AND dropping every persisted/checkpointed
-    // block, so index builds that the warm-up pass normally absorbs
-    // (shingle/IVF/edge/cc/bridge/kcore/ball/walks/pair memos) are
-    // charged to the queries that need them — the honest cold
-    // single-shot cost at scale. Runs AFTER the heal pass so the
-    // default warm numbers are untouched; emits total_cold/queries_cold
-    // in the detail line plus its own stdout metric line (the final
-    // "total" line stays LAST — the driver contract).
+    val healedQs = jsonMap(healed.toSeq.sortBy(_._1))
+    // Cold path (default off): with SPARK_GRAFT_COLD=1 a second loop
+    // times every query after evicting every SessionCache memo and
+    // dropping every persisted/checkpointed block, so index builds that
+    // the warm-up pass normally absorbs (shingle/IVF/edge/cc/bridge/
+    // kcore/ball/walks/pair memos) are charged to the queries that need
+    // them. It runs after the heal pass so the warm numbers are
+    // untouched, and emits total_cold/failed_cold/queries_cold in the
+    // detail line plus its own stdout metric line (the final "total"
+    // line stays last).
     val coldMode = sys.env.get("SPARK_GRAFT_COLD").contains("1")
-    val coldResults: Seq[(String, Double)] =
+    val coldTimings: Seq[(String, Option[Double])] =
       if (!coldMode) Seq.empty
       else SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
         SessionCache.evictAll()
         // localCheckpoint blocks are not reachable from DataFrame
         // .unpersist — dropping ALL persistent RDDs is safe here
-        // because every memo entry referencing them was just evicted
+        // because every memo entry referencing them was just evicted;
+        // blocking, so no block is still being dropped while the query
+        // is timed
         spark.sparkContext.getPersistentRDDs.values
-          .foreach(r => try r.unpersist(false) catch {
+          .foreach(r => try r.unpersist(true) catch {
             case _: Throwable => ()
           })
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        name -> (System.nanoTime() - t0) / 1e9
+        name -> timed(fn(spark, sfDir).count())
       }
+    val coldResults = coldTimings.collect { case (k, Some(v)) => k -> v }
     val coldTotal = coldResults.map(_._2).sum
+    val coldFailed = coldTimings.collect { case (k, None) => k }
     val coldFields =
       if (!coldMode) ""
-      else {
-        val cq = coldResults.map { case (k, v) => "\"" + k + "\":" + v }
-          .mkString("{", ",", "}")
-        s""","total_cold":$coldTotal,"queries_cold":$cq"""
-      }
+      else s""","total_cold":$coldTotal,"failed_cold":${jsonList(coldFailed)},"queries_cold":${jsonMap(coldResults)}"""
     val detail =
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"label":"$label","host_load":$load,"host_load_start":$loadStart,"steal_pct_start":$stealStart,"steal_pct_end":$stealEnd,"canary_n":${canaryTimes.size},"canary_min":${if (canaryTimes.isEmpty) 0.0 else canaryTimes.min},"canary_max":${if (canaryTimes.isEmpty) 0.0 else canaryTimes.max},"canary_suspect":$canarySus,"contaminated":$contaminated,"total_drift":$totalDrift,"common_total":$commonTotal,"common_median_total":$commonMedianTotal,"inflated_trivial":${inflated.map("\"" + _ + "\"").mkString("[", ",", "]")},"healed_total":$healedTotal,"healed_queries":$healedQs,"cpus_avail":${os.getAvailableProcessors},"n_hist_queries":${medians.size},"host_fp":"$hostFp","ts_s":${System.currentTimeMillis / 1000}$coldFields,"queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${timings.size},"failed":${jsonList(failed)},"label":"$label","host_load":$load,"host_load_start":$loadStart,"steal_pct_start":$stealStart,"steal_pct_end":$stealEnd,"canary_n":${canaryTimes.size},"canary_min":${if (canaryTimes.isEmpty) 0.0 else canaryTimes.min},"canary_max":${if (canaryTimes.isEmpty) 0.0 else canaryTimes.max},"canary_suspect":$canarySus,"contaminated":$contaminated,"total_drift":$totalDrift,"common_total":$commonTotal,"common_median_total":$commonMedianTotal,"inflated_trivial":${jsonList(inflated)},"healed_total":$healedTotal,"healed_queries":$healedQs,"cpus_avail":${os.getAvailableProcessors},"n_hist_queries":${medians.size},"host_fp":"$hostFp","ts_s":${System.currentTimeMillis / 1000}$coldFields,"queries":$qs,"sf":"$sfDir"}"""
     println(detail)
     // Fixed SMALL per-run file (r14 item 2): the driver's stdout tail
     // capture truncated the per-query lines in round 13 (PERF had

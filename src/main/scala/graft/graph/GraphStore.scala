@@ -3,7 +3,6 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.BucketedParquet
-import graft.io.BucketedParquet.B
 
 /** Property-graph vertex/edge store with Cypher-MERGE semantics over
   * Parquet (SURVEY §1.3, §2.9).
@@ -22,11 +21,9 @@ import graft.io.BucketedParquet.B
   *    reference's "stable once created" contract AND makes replays
   *    byte-identical (stronger idempotency than the original).
   *
-  * Scale: tables are hash-bucketed via [[BucketedParquet]] — a MERGE
-  * or DETACH-DELETE batch rewrites only the buckets it touches; the
-  * other N−1 bucket files are left byte-identical on disk. A 1k-row
-  * amendment batch against a 100 TB Expenditure table therefore
-  * rewrites ~batch-sized buckets, not the store.
+  * MERGE and DETACH DELETE go through [[BucketedParquet]]'s keyed
+  * read-merge-swap path (`merge`, `deleteKeys`); see its doc for the
+  * layout and what a batch rewrites.
   */
 final class GraphStore(spark: SparkSession, baseDir: String,
     numBuckets: Int = 16) {
@@ -55,29 +52,12 @@ final class GraphStore(spark: SparkSession, baseDir: String,
 
   /** MERGE semantics on a keyed table; see class doc. */
   private def mergeInto(dir: String, keyCols: Seq[String], batch: DataFrame,
-      uuidCol: Column): Unit = {
-    // last-writer-wins within the batch: keep the LAST occurrence per
-    // key (matches sequential UNWIND application). max_by hash-agg —
-    // one shuffle, no per-key sort.
-    val propCols0 = batch.columns.filterNot(keyCols.contains).toSeq
-    val deduped0 =
-      if (propCols0.isEmpty) batch.dropDuplicates(keyCols)
-      else batch.withColumn("__ord", monotonically_increasing_id())
-        .groupBy(keyCols.map(col): _*)
-        .agg(max_by(struct(propCols0.map(col): _*), col("__ord")).as("__s"))
-        .select(keyCols.map(col) ++
-          propCols0.map(c => col(s"__s.$c").as(c)): _*)
-    // evaluated twice (touched-bucket collect + merge join) — persist
-    // for the duration of the write, released before returning
-    val deduped = deduped0.withColumn("uuid", uuidCol).persist()
-    // the stored layout's bucket count is authoritative over the
-    // constructor default once the table exists
-    val n = BucketedParquet.layoutBuckets(dir, numBuckets)
-    val touched = BucketedParquet.touchedBuckets(deduped, keyCols, n)
-    if (touched.isEmpty) { deduped.unpersist(); return }
-    val merged = BucketedParquet.readBuckets(spark, dir, touched) match {
-      case None => deduped
-      case Some(old) =>
+      uuidCol: Column): Unit =
+    BucketedParquet.merge(spark, dir, keyCols,
+      BucketedParquet.dedupLastWins(batch, keyCols).withColumn("uuid", uuidCol),
+      numBuckets) {
+      case (None, deduped) => deduped
+      case (Some(old), deduped) =>
         val propCols = deduped.columns.filterNot(keyCols.contains).toSeq
         val oldRenamed = old.select(
           (keyCols.map(col) ++
@@ -98,11 +78,6 @@ final class GraphStore(spark: SparkSession, baseDir: String,
         }
         joined.select(outCols: _*)
     }
-    BucketedParquet.writeBuckets(dir,
-      merged.withColumn(B, BucketedParquet.bucketOf(keyCols, n)),
-      touched, markerKey = keyCols, numBuckets = n)
-    deduped.unpersist()
-  }
 
   /** MERGE a vertex batch: `batch` columns = keyCols ++ props. */
   def mergeVertices(label: String, keyCols: Seq[String],
@@ -118,44 +93,20 @@ final class GraphStore(spark: SparkSession, baseDir: String,
 
   /** Amendment tombstone (G8): DETACH DELETE by key — remove matching
     * vertices AND any edges in `edgeTypes` referencing them via
-    * `edgeKeyCols` (the edge columns holding this label's key). Only
-    * the buckets holding deleted keys are rewritten. */
+    * `edgeKeyCols` (the edge columns holding this label's key). A table
+    * is rewritten only in the buckets that lose a row. */
   def detachDelete(label: String, keyCols: Seq[String], keys: DataFrame,
       edges: Seq[(String, Seq[String])]): Unit = {
     val keysD = keys.select(keyCols.map(col): _*).distinct()
       // materialized once: reused to bucket + anti-join several tables
       .localCheckpoint(true)
-    deleteFrom(vertexDir(label), keyCols, keysD)
+    BucketedParquet.deleteKeys(spark, vertexDir(label), keyCols, keysD,
+      numBuckets)
     edges.foreach { case (tpe, edgeKeyCols) =>
       val renamedKeys = keysD.select(
         keyCols.zip(edgeKeyCols).map { case (k, ek) => col(k).as(ek) }: _*)
-      deleteFrom(edgeDir(tpe), edgeKeyCols, renamedKeys)
+      BucketedParquet.deleteKeys(spark, edgeDir(tpe), edgeKeyCols, renamedKeys,
+        numBuckets)
     }
-  }
-
-  private def deleteFrom(dir: String, matchCols: Seq[String],
-      keysD: DataFrame): Unit = {
-    if (!BucketedParquet.exists(dir)) return
-    // bucket ids are computable from the keys only when the table is
-    // laid out by exactly the match columns (vertices); an edge deleted
-    // via a SUBSET of its identity (e.g. SPENT by (file_num, tran_id))
-    // discovers its touched buckets with a key-column-pruned semi-join
-    // scan instead — still no rewrite outside them.
-    val n = BucketedParquet.layoutBuckets(dir, numBuckets)
-    val touched: Seq[Int] =
-      if (BucketedParquet.layoutKey(dir).contains(matchCols))
-        BucketedParquet.touchedBuckets(keysD, matchCols, n)
-      else spark.read.option("mergeSchema", "true").parquet(dir)
-        .join(keysD, matchCols, "left_semi")
-        .select(col(B)).distinct().collect().map(_.getInt(0)).toSeq.sorted
-    if (touched.isEmpty) return
-    BucketedParquet.readBuckets(spark, dir, touched, keepBucket = true)
-      .foreach { old =>
-        // rows keep their STORED bucket — the layout key may not be
-        // recomputable from matchCols
-        val kept = old.join(keysD, matchCols, "left_anti")
-        BucketedParquet.writeBuckets(dir, kept, touched,
-          markerKey = matchCols, numBuckets = n)
-      }
   }
 }

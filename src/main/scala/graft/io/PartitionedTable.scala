@@ -16,14 +16,13 @@ import org.apache.spark.sql.functions._
 object PartitionedTable {
 
   /** Write `df` partitioned by `partitionCol` (dynamic overwrite: only
-    * the partitions present in `df` are replaced). */
-  def write(df: DataFrame, dir: String, partitionCol: String): Unit = {
-    df.sparkSession.conf
-      .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    * the partitions present in `df` are replaced). The overwrite mode is
+    * a per-write option; the session conf is left as it is. */
+  def write(df: DataFrame, dir: String, partitionCol: String): Unit =
     df.write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCol)
       .parquet(dir)
-  }
 
   def read(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(dir)

@@ -34,8 +34,8 @@ import graft.io.DocStore
   * exactly what the A2 queue exists to find.
   *
   * Scale: every stage is a key join or keyed store write; the store is
-  * hash-bucketed so a daily batch rewrites batch-sized buckets of a
-  * 100 TB index, and the dedup queue reads only the last day's slice.
+  * hash-bucketed (see [[graft.io.BucketedParquet]] for what a batch
+  * rewrites), and the dedup queue reads only the last day's slice.
   */
 object ArticlesPipeline {
 

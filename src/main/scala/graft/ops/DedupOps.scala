@@ -624,8 +624,8 @@ object DedupOps {
     * positives) and the ground truth.
     *
     * 100 TB posture: the stored-key scan reduces to one 512-byte
-    * sketch (vs `storedKeys`' bucket-pruned parquet probe —
-    * io/DocStore.scala:41); probe-side evaluation is a map-only
+    * sketch (vs `BucketedParquet.storedKeys`, a bucket-pruned parquet
+    * probe); probe-side evaluation is a map-only
     * filter, and only "maybe" survivors (FP-rate-bounded) pay the
     * exact join. Production sizes m ∝ stored-key count; 4096 bits is
     * the oracle-replayable demo size. */

@@ -52,6 +52,15 @@ class DocStoreSpec extends SparkFunSuite {
     store.index("idx", "doc_id",
       Seq((1L, "first"), (1L, "second")).toDF("doc_id", "v"))
     assert(store.read("idx").get.select("v").as[String].head() == "second")
+    // the graph store's MERGE dedups on a composite key the same way
+    val graph = new graft.graph.GraphStore(spark,
+      Files.createTempDirectory("graph").toString)
+    graph.mergeVertices("Donor", Seq("name", "zip"),
+      Seq(("ann", "1", "first"), ("ann", "2", "other"), ("ann", "1", "second"))
+        .toDF("name", "zip", "v"))
+    val donors = graph.readVertices("Donor").get
+      .orderBy("zip").select("zip", "v").as[(String, String)].collect().toSeq
+    assert(donors == Seq(("1", "second"), ("2", "other")))
   }
 }
 

@@ -70,4 +70,10 @@ class BenchHealSpec extends AnyFunSuite {
     assert(!graft.Bench.canarySuspect(Seq(0.2, 0.9)))
     assert(!graft.Bench.canarySuspect(Nil))
   }
+
+  test("a query that throws gets no time; one that returns gets its time") {
+    assert(graft.Bench.timed(throw new RuntimeException("boom")).isEmpty)
+    val t = graft.Bench.timed(Thread.sleep(20))
+    assert(t.exists(_ >= 0.02), s"timed: $t")
+  }
 }

@@ -493,7 +493,11 @@ class PlanAuditSpec extends SparkFunSuite {
     val dir = Files.createTempDirectory("ptab").toString + "/t"
     val df = graft.Tables.orders(spark, sfDir)
       .withColumn("cycle", (col("o_orderkey") % 3 + 2018).cast("int"))
+    val modeKey = "spark.sql.sources.partitionOverwriteMode"
+    val modeBefore = spark.conf.getOption(modeKey)
     PartitionedTable.write(df, dir, "cycle")
+    assert(spark.conf.getOption(modeKey) == modeBefore,
+      "the write must not change the session's overwrite mode")
     val pruned = PartitionedTable.readPartition(spark, dir, "cycle", 2019)
     val p = plan(pruned)
     assert(p.contains("PartitionFilters: [isnotnull(cycle"))
