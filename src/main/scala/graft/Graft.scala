@@ -31,18 +31,4 @@ object Graft {
     functions.expressions.GramMoments.register(spark)
     spark
   }
-
-  /** Recommended session for this engine (local mode; on a cluster the
-    * master/shuffle settings come from spark-submit instead). */
-  def session(appName: String = "graft", master: String = "local[*]",
-      shufflePartitions: Int = 32): SparkSession = {
-    val s = SparkSession.builder()
-      .master(master)
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    init(s)
-  }
 }

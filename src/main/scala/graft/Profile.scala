@@ -1,21 +1,36 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.execution.ExplainMode
 import scala.collection.mutable
 
-/** Dev utility (optimization rounds): run one catalog query steady-state
-  * and print its per-job / per-stage breakdown — job wall ms, stage task
-  * counts, task time sums, shuffle bytes — so "slow" decomposes into
-  * scheduling floor vs shuffle vs compute before anything is changed.
+/** Dev profiling main: run catalog queries steady-state and print, per
+  * rep, the wall time and the per-job / per-stage breakdown — job and
+  * stage counts, task counts, GC, CPU, shuffle bytes — so "slow"
+  * decomposes into scheduling floor vs shuffle vs compute before
+  * anything is changed. Job, stage and task counts do not depend on the
+  * host; they are the signal to compare across changes when wall times
+  * are noisy.
   *
-  * Usage: `runMain graft.JobProfile <sfDir> <name> [reps]`
+  * The whole list warms twice first (codegen + memoized artifacts, so
+  * shared memos are attributed as in Bench's steady-state loop), then
+  * each query runs `reps` times in list order. With a plan directory,
+  * the last rep's `explain("formatted")` is written to
+  * `<planDir>/<name><suffix>.txt` — the
+  * `plans/rNN/<name>_before|_after.txt` evidence convention. The timed
+  * `count()` runs its own aggregate plan, so the dumped plan is AQE's
+  * initial plan (`isFinalPlan=false`) over warm memoized artifacts.
+  *
+  * Usage: `runMain graft.Profile <sfDir> <n1,n2,...> [reps] [planDir suffix]`
   */
-object JobProfile {
+object Profile {
   def main(args: Array[String]): Unit = {
     val (sfDir, names) = (args(0), args(1).split(',').toSeq)
     val reps = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.local(cpus) // same confs as Bench/Verify (r14)
+    val planOut = if (args.length > 3) Some((args(3), args(4))) else None
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = Sessions.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     final case class StageRow(id: Int, name: String, nTasks: Int,
@@ -42,16 +57,17 @@ object JobProfile {
       }
     }
 
-    // warm-up the whole list first: codegen + memoized artifacts
     names.foreach(n => SparkEntry.queries(n)(spark, sfDir).count())
     names.foreach(n => SparkEntry.queries(n)(spark, sfDir).count())
     spark.sparkContext.addSparkListener(listener)
+    planOut.foreach { case (dir, _) => Files.createDirectories(Paths.get(dir)) }
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
-      (1 to reps).foreach { i =>
+      val runs = (1 to reps).map { i =>
         jobStart.clear(); jobRows.clear(); stageRows.clear()
         val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
+        val df = fn(spark, sfDir)
+        df.count()
         val wall = (System.nanoTime() - t0) / 1e9
         Thread.sleep(500) // let the async listener bus drain
         val jobsMs = jobRows.map(_._2).sum
@@ -64,6 +80,14 @@ object JobProfile {
             f"cpu=${r.cpuMs}%6d gc=${r.gcMs}%5d tasks=${r.nTasks}%4d " +
             f"shufR=${r.shufReadB}%9d shufW=${r.shufWriteB}%9d  ${r.name}")
         }
+        df
+      }
+      for ((dir, suffix) <- planOut; df <- runs.lastOption) {
+        val path = Paths.get(dir, s"$name$suffix.txt")
+        Files.write(path, (s"-- $name @ $sfDir (cpus=$cpus)\n" +
+          df.queryExecution.explainString(ExplainMode.fromString("formatted")))
+          .getBytes("UTF-8"))
+        println(s"[prof] wrote $path")
       }
     }
     spark.stop()

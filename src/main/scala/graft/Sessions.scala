@@ -2,34 +2,19 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The ONE local-mode session builder every main shares (r14 item 1).
+/** The one local-mode session builder every main shares, so the
+  * correctness gate (Verify) runs the same confs the bench measures.
   *
-  * Round 13 delivered `spark.sql.files.openCostInBytes=128KB` only in
-  * the perf-harness sessions (Bench/TimeQuery/JobProfile/PlanDump) —
-  * the verdict called that the wrong layer: a measured-path-only conf
-  * is indistinguishable from a benchmark trick. The r14 quiet-host
-  * A/B/A (BENCH_DETAIL `r14-ab-a1`=281.6 s @128KB, `r14-ab-b4m`=280.2 s
-  * @4MB default, `r14-ab-a2`=291.7 s @128KB) shows the conf is
-  * TOTAL-NEUTRAL at local[32] (B lands between the two same-conf A
-  * runs; the suspected small-query inflation did not reproduce —
-  * <0.3 s bucket geomean B/A1 = 1.003), while the r13 steady-state
-  * reps showed real per-query wins on scan-rooted compute stages
-  * (q09 1.10→0.80 s, o15 3.17→1.74 s, graph_cooccur 2.04→1.06 s). So
-  * the conf moves HERE, code-delivered to every entrypoint including
-  * Verify — the correctness gate now runs the same scan-split sizing
-  * the bench measures.
-  *
-  * Scale posture (guide §6.1): with production-sized files
-  * (128 MB–1 GB) `maxPartitionBytes` governs splits and the lowered
-  * open cost is inert; it only stops the small-single-file under-split
-  * (a 4 MB open cost floors maxSplitBytes at 4 MB, so an 11 MB table
-  * scans 3-wide regardless of cores). Env-overridable for A/B
-  * (`SPARK_GRAFT_OPEN_COST`), default 128 KB.
+  * Scan-split sizing: `spark.sql.files.openCostInBytes` is 128 KB
+  * instead of Spark's 4 MB default. A 4 MB open cost floors the max
+  * split size at 4 MB, so a small single-file table scans too narrowly
+  * (an 11 MB table scans 3-wide whatever the core count). With
+  * production-sized files (128 MB–1 GB) `maxPartitionBytes` governs
+  * the splits and the lowered open cost is inert.
   */
 object Sessions {
 
-  def openCost: String =
-    sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", "131072")
+  val openCost: String = "131072"
 
   /** Standard local session for the graft mains: `local[cpus]` master,
     * shuffle width = cpus, AQE on, UTC, UI off, shared scan-split

@@ -75,7 +75,7 @@ object DedupOps {
     * Unsorted — each reader adds its own presentation order. Lazily
     * persisted (NOT checkpointed): plan-only consumers never pay the
     * corpus pass, and the cached lineage stays visible to the plan
-    * audits (PLANS.md, PlanAuditSpec's window-freedom assertions). */
+    * audits (PlanAuditSpec's window-freedom assertions). */
   private[ops] def minhashPairs(s: SparkSession, d: String): DataFrame =
     minhashPairsCache.getOrCompute(s, d) {
       minhashPairsPlan(s, d).persist()

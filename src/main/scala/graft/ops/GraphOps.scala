@@ -1338,6 +1338,12 @@ object GraphOps {
     def q15(c: org.apache.spark.sql.Column) =
       round(c, 15).cast("decimal(25,15)")
     def qsum(c: String) = sum(col(c)).cast("double")
+    // the round max; an empty projection has no max (NULL) and no rows
+    // to scale, so any divisor yields the empty panel
+    def roundMax(t: DataFrame): Double = {
+      val r = t.agg(max(col("v"))).head()
+      if (r.isNullAt(0)) 1.0 else r.getDouble(0)
+    }
     var hub = csByC.select(col("c")).distinct()
       .withColumn("hub", lit(1.0))
       .withColumn("hubq", q15(lit(1.0)))
@@ -1381,14 +1387,14 @@ object GraphOps {
       val av = csByC.join(hub, "c").groupBy(col("sk"))
         .agg(qsum("hubq").as("v"))
         .localCheckpoint(false)
-      val am = av.agg(max(col("v"))).head().getDouble(0)
+      val am = roundMax(av)
       auth = av.select(col("sk"), (col("v") / lit(am)).as("auth"))
         .withColumn("authq", q15(col("auth")))
         .repartition(edgeParts, col("sk"))
       val hv = csBySk.join(auth, "sk").groupBy(col("c"))
         .agg(qsum("authq").as("v"))
         .localCheckpoint(false)
-      val hm = hv.agg(max(col("v"))).head().getDouble(0)
+      val hm = roundMax(hv)
       hub = hv.select(col("c"), (col("v") / lit(hm)).as("hub"))
         .withColumn("hubq", q15(col("hub")))
         .repartition(edgeParts, col("c"))
@@ -1504,25 +1510,6 @@ object GraphOps {
         round(col("kx").cast("double") / 512.0, 6).as("katz"))
       .orderBy(col("katz").desc, col("node").asc)
       .limit(20)
-  }
-
-  /** Dev evidence hook (NOT a catalog entry; used by PlanDump's
-    * devPlans): ONE authority half-round of [[graphHits]] — the
-    * memoized c-partitioned edge copy joined with a representative
-    * checkpointed-then-repartitioned hub table, exactly the per-round
-    * join the loop executes — so the committed formatted plan can show
-    * whether the edge side carries an exchange (r13 verdict: the
-    * committed hits plans only showed the post-loop assembly). */
-  private[graft] def hitsHalfRoundPlan(s: SparkSession, d: String)
-      : DataFrame = {
-    val (csBySk, csByC) = hitsIndex(s, d)
-    val edgeParts = csBySk.rdd.getNumPartitions
-    val hub = csByC.select(col("c")).distinct()
-      .withColumn("hubq", round(lit(1.0), 15).cast("decimal(25,15)"))
-      .localCheckpoint() // same provenance as a round's score table
-      .repartition(edgeParts, col("c"))
-    csByC.join(hub, "c").groupBy(col("sk"))
-      .agg(sum(col("hubq")).cast("double").as("v"))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -79,11 +79,11 @@ object PlanCensus {
   }
 
   /** T242: AQE join-strategy census over the reference join-plan panel
-    * (q02 / q09 / q18 — the three PLANS.md dump anchors). Executes each
+    * (q02 / q09 / q18). Executes each
     * panel query to its FINAL adaptive plan and pins the join census —
     * how many broadcast-hash vs sort-merge joins survived AQE's
     * runtime re-plan, and which side it chose to build — as a
-    * hash-checked catalog row. This turns PLANS.md's prose claims
+    * hash-checked catalog row. This turns prose plan claims
     * ("the dim side broadcasts") into a driver-checkable contract: a
     * lost broadcast (a stats regression, a disabled rule, a stray
     * hint) flips a count and goes red in the catalog instead of
