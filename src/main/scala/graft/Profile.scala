@@ -15,12 +15,15 @@ import scala.collection.mutable
   *
   * The whole list warms twice first (codegen + memoized artifacts, so
   * shared memos are attributed as in Bench's steady-state loop), then
-  * each query runs `reps` times in list order. With a plan directory,
-  * the last rep's `explain("formatted")` is written to
+  * each query runs `reps` times in list order. Every run drains the
+  * query's full output through `df.queryExecution.toRdd`, so the timed
+  * work includes every output column (a `count()` would run its own
+  * aggregate plan, which prunes the columns it does not need). With a
+  * plan directory, the last rep's `explain("formatted")` is written to
   * `<planDir>/<name><suffix>.txt` — the
-  * `plans/rNN/<name>_before|_after.txt` evidence convention. The timed
-  * `count()` runs its own aggregate plan, so the dumped plan is AQE's
-  * initial plan (`isFinalPlan=false`) over warm memoized artifacts.
+  * `plans/rNN/<name>_before|_after.txt` evidence convention. It is the
+  * plan of the drained DataFrame itself, so it is AQE's final plan
+  * (`isFinalPlan=true`) over warm memoized artifacts.
   *
   * Usage: `runMain graft.Profile <sfDir> <n1,n2,...> [reps] [planDir suffix]`
   */
@@ -57,8 +60,10 @@ object Profile {
       }
     }
 
-    names.foreach(n => SparkEntry.queries(n)(spark, sfDir).count())
-    names.foreach(n => SparkEntry.queries(n)(spark, sfDir).count())
+    def drain(df: org.apache.spark.sql.DataFrame): Unit =
+      df.queryExecution.toRdd.foreach(_ => ())
+    names.foreach(n => drain(SparkEntry.queries(n)(spark, sfDir)))
+    names.foreach(n => drain(SparkEntry.queries(n)(spark, sfDir)))
     spark.sparkContext.addSparkListener(listener)
     planOut.foreach { case (dir, _) => Files.createDirectories(Paths.get(dir)) }
     names.foreach { name =>
@@ -67,7 +72,7 @@ object Profile {
         jobStart.clear(); jobRows.clear(); stageRows.clear()
         val t0 = System.nanoTime()
         val df = fn(spark, sfDir)
-        df.count()
+        drain(df)
         val wall = (System.nanoTime() - t0) / 1e9
         Thread.sleep(500) // let the async listener bus drain
         val jobsMs = jobRows.map(_._2).sum

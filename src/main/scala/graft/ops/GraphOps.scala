@@ -2,7 +2,9 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import scala.collection.mutable
 import graft.Tables
 
 /** Whole-graph algorithms over relationally-derived edge sets — the
@@ -11,6 +13,8 @@ import graft.Tables
   * Cypher merges and leaves ranking/centrality to the warehouse).
   * Pattern shared with `dedup_clusters`' label propagation: iterative
   * DataFrame compute, `localCheckpoint` per round to truncate lineage.
+  * What the entries share — edge sets, degrees, walks, pair tables —
+  * lives in one [[GraphIndex]] per (session, dataset).
   */
 object GraphOps {
 
@@ -49,12 +53,6 @@ object GraphOps {
       .agg(sort_array(collect_list(col("sk"))).as("ss"))
   }
 
-  /** The distinct customer↔supplier bipartite projection (o_custkey,
-    * l_suppkey from orders ⋈ lineitem) — the shared substrate of
-    * [[edgeIndex]], [[graphCooccur]] and [[graphLinkpred]]. Built once
-    * per (session, dataset) and persisted, like the shingle/IVF index
-    * artifacts: without the memo each graph query would re-pay the
-    * fact-table join + distinct. */
   /** Shuffle width for a persisted/checkpointed iterative-loop
     * artifact, sized to the DATA instead of the session width: ~250k
     * rows per partition, floor 4, cap 2048. A session-wide 32 makes
@@ -79,69 +77,269 @@ object GraphOps {
       .toInt
   }
 
-  private val csCache = new graft.SessionCache[DataFrame](df => {
-    df.unpersist(); ()
-  })
+  /** Distinct customer–supplier pairs `(c, sk)` of orders ⋈ lineitem,
+    * over the lineitems that pass `gate`: the one edge derivation of the
+    * graph suite. Ungated it is the full bipartite projection; the gated
+    * subgraphs of [[GraphIndex]] keep structure the full graph is too
+    * dense to show. */
+  private def custSupp(s: SparkSession, d: String,
+      gate: Column = lit(true)): DataFrame = {
+    val ord = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
+    val li = Tables.lineitem(s, d).filter(gate)
+      .select(col("l_orderkey"), col("l_suppkey"))
+    li.join(ord, li("l_orderkey") === ord("o_orderkey"))
+      .select(col("o_custkey").as("c"), col("l_suppkey").as("sk"))
+      .distinct()
+  }
 
-  private def csIndex(s: SparkSession, d: String): DataFrame =
-    csCache.getOrCompute(s, d) {
-      val ord = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
-      val li = Tables.lineitem(s, d).select(col("l_orderkey"), col("l_suppkey"))
-      li.join(ord, li("l_orderkey") === ord("o_orderkey"))
-        .select(col("o_custkey").as("c"), col("l_suppkey").as("sk"))
-        .distinct()
-        .persist()
+  /** The symmetric `(src, dst)` edge list of customer–supplier pairs,
+    * node ids prefixed "c"/"s". The prefixes keep the two directions
+    * disjoint, so the union adds no duplicate edge. */
+  private def symmetric(cs: DataFrame): DataFrame = {
+    val pairs = cs.select(concat(lit("c"), col("c")).as("src"),
+      concat(lit("s"), col("sk")).as("dst"))
+    pairs.union(pairs.select(col("dst").as("src"), col("src").as("dst")))
+  }
+
+  /** Every pair `a < b` of a row's sorted posting `ss`, exploded into
+    * the struct column `p` (`p.s1`, `p.s2`): the narrow in-row pair
+    * expansion (the textPmi idiom), so no posting self-join runs and
+    * only the pair aggregate shuffles. */
+  private def sortedPairs: Column = explode(expr(
+    """flatten(transform(ss, (a, i) ->
+      |  transform(slice(ss, i + 2, size(ss)), b ->
+      |    struct(a AS s1, b AS s2))))""".stripMargin)).as("p")
+
+  /** Undirected supplier co-occurrence edges `(s1 < s2)`: the supplier
+    * pairs that share at least two customers in `cs`. */
+  private def coEdges(cs: DataFrame): DataFrame =
+    cs.groupBy("c").agg(sort_array(collect_list(col("sk"))).as("ss"))
+      .select(sortedPairs).select(col("p.s1"), col("p.s2"))
+      .groupBy("s1", "s2").agg(count(lit(1)).as("co"))
+      .filter(col("co") >= 2).select(col("s1"), col("s2"))
+
+  /** The graph index of one (session, dataset): every artifact two or
+    * more graph entries (or two calls of one entry) share. Each artifact
+    * is a lazy member, so a query builds only what it reads, and each is
+    * built once; the constructor does no work. Every frame an artifact
+    * keeps is pinned, and [[release]] frees them all: persisted frames
+    * leave the cache manager, and checkpointed ones lose the RDD under
+    * their `LogicalRDD` leaves. Unpersisting those RDDs is safe only
+    * because the whole index goes at once — no artifact survives whose
+    * lineage ends in a freed block. */
+  private final class GraphIndex(s: SparkSession, d: String) {
+    private val pinned = mutable.ArrayBuffer.empty[DataFrame]
+    private def pin(df: DataFrame): DataFrame = synchronized {
+      pinned += df; df
     }
 
-  /** The symmetrized edge+degree tables and node count are an INDEX
-    * over the dataset — built once per (session, dataset), persisted,
-    * reused by every ranking run (the same amortization the ANN/dedup
-    * artifacts use). The NODE-sized deg table is kept alongside the
-    * EDGE-sized join: node-level consumers (initial ranks, the node
-    * count, the degree histogram) read deg and never pay an E-row
-    * distinct on a dense graph. */
-  private val edgeIndexCache =
-    new graft.SessionCache[(DataFrame, DataFrame, Long)](v => {
-      v._1.unpersist(); v._2.unpersist(); ()
-    })
+    /** The frames built so far. */
+    def built: Seq[DataFrame] = synchronized { pinned.toList }
 
-  private def edgeIndex(s: SparkSession, d: String)
-      : (DataFrame, DataFrame, Long) =
-    edgeIndexCache.getOrCompute(s, d) {
-      // derive from the memoized bipartite projection — the fact join
-      // + distinct is paid once per (session, dataset) across the
-      // whole graph suite
-      val pairs = csIndex(s, d)
-        .select(concat(lit("c"), col("c")).as("src"),
-          concat(lit("s"), col("sk")).as("dst"))
-      // symmetrize: prefixes keep the two directions disjoint, so this
-      // union introduces no duplicate edges
-      val edges = pairs.union(
-        pairs.select(col("dst").as("src"), col("src").as("dst")))
-      val deg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
-        .persist()
-      // pre-partitioned by src: every iterative consumer (pagerank,
-      // LPA, BFS) joins this table on src each round. At cluster
-      // scale the node table won't broadcast and the persisted hash
-      // partitioning is what keeps the per-round join from
-      // re-shuffling the edge table every iteration. Width is sized
-      // to the DATA (the graph_cc round-10 lesson: a session-wide 32
-      // makes every round's map side pay 32 task launches for a few
-      // thousand rows — measured 23% of an iterative loop).
-      // width stays PURELY size-based (cores=1 disables the r13 core
-      // floor here): widening this index 4→32 at sf0.1 was A/B'd and
-      // REGRESSED every consumer (pagerank +0.3 s, katz +1.25 s,
-      // diameter +1.3 s, betweenness +0.8 s in the wave-1 bench) —
-      // per-round stage walls did not shrink with 8× more tasks, so
-      // the rounds are stage-latency-bound, not compute-bound, and
-      // the extra 170 task launches per query were pure cost.
-      val edgesDeg = edges.join(deg, "src")
-        .repartition(dataParts(csIndex(s, d).count() * 2L, 1), col("src"))
-        .persist()
-      // bounded driver scalar (node count), like the bucket-id collects
-      val n = deg.count()
-      (edgesDeg, deg, n)
+    def release(): Unit = synchronized {
+      pinned.foreach { df =>
+        df.unpersist()
+        df.queryExecution.logical.foreach {
+          case l: LogicalRDD => l.rdd.unpersist()
+          case _ =>
+        }
+      }
+      pinned.clear()
     }
+
+    /** The full bipartite projection, persisted. */
+    lazy val cs: DataFrame = pin(custSupp(s, d).persist())
+
+    /** The symmetric edge list with the source's out-degree attached
+      * (hash-partitioned by src, persisted: every iterative consumer
+      * joins it on src each round), the node-sized degree table
+      * (persisted: node-level consumers never pay an edge-sized
+      * distinct) and the node count. The width is size-based only
+      * (cores = 1 disables [[dataParts]]' core floor): the rounds are
+      * bound by stage latency, so more tasks per round only add launch
+      * cost. */
+    lazy val edges: (DataFrame, DataFrame, Long) = {
+      val e = symmetric(cs)
+      val deg = pin(e.groupBy("src").agg(count(lit(1)).as("outdeg")).persist())
+      val edgesDeg = pin(e.join(deg, "src")
+        .repartition(dataParts(cs.count() * 2L, 1), col("src")).persist())
+      (edgesDeg, deg, deg.count())
+    }
+
+    /** The 6-hop multi-seed [[bfs]] ball from seeds c1–c5, persisted.
+      * BFS level sets do not depend on the hop budget, so
+      * [[graphPaths]] (c1, dist ≤ 3), [[graphCloseness]] (dist ≤ 3) and
+      * [[graphDiameter]]'s first sweep (c1) read one walk. The ball is a
+      * union of ≤ 6 checkpointed frontiers, so persist is enough. */
+    lazy val ball: DataFrame = {
+      import s.implicits._
+      val seeds = Seq("c1", "c2", "c3", "c4", "c5").toDF("seed")
+        .select(col("seed"), col("seed").as("node"), lit(0).as("dist"))
+      pin(bfs(edges._1.select(col("src"), col("dst")), seeds, hops = 6)
+        .persist())
+    }
+
+    /** The unordered walk rows of [[graphWalks]] and [[graphWalkPairs]]:
+      * the neighbor-rank window is checkpointed once, and each of the 4
+      * frontier rounds (≤ 20 walker rows) cuts its lineage, so the
+      * artifact is a union of checkpointed frontiers. */
+    lazy val walks: DataFrame = {
+      import s.implicits._
+      val (edgesDeg, _, _) = edges
+      val nb = edgesDeg.withColumn("rn",
+        row_number().over(Window.partitionBy("src").orderBy("dst")))
+        .localCheckpoint()
+      val starts = (1 to 20).map(i => s"c$i").toDF("start")
+      var frontier = starts
+        .select(col("start"), col("start").as("node"), lit(0).as("step"))
+        .localCheckpoint()
+      var acc = frontier
+      for (k <- 1 to 4) {
+        // fresh alias per round: the frontier already carries nb lineage
+        val n = s"nb$k"
+        frontier = frontier.as("w")
+          .join(nb.as(n), col("w.node") === col(s"$n.src")
+            && (conv(substring(md5(concat(col("w.start"), lit(s":$k:"),
+                col("w.node"))), 1, 8), 16, 10).cast("long")
+              % col(s"$n.outdeg")) + 1 === col(s"$n.rn"))
+          .select(col("w.start").as("start"),
+            col(s"$n.dst").as("node"), lit(k).as("step"))
+          .localCheckpoint()
+        acc = acc.unionAll(frontier)
+      }
+      pin(acc)
+    }
+
+    private var pairStatsAt: Option[(Int, DataFrame)] = None
+
+    /** Supplier-pair co-occurrence counts `co` and Adamic–Adar weight
+      * sums `aa_sum` from ONE pair expansion of [[custPostings]],
+      * persisted, for the current `spark.graft.graph.maxDegree`: the
+      * most expensive computation of the suite, shared by
+      * [[graphCooccur]] and [[graphLinkpred]]. The weight 1/ln(deg_c)
+      * is quantized to the 1e-12 grid once per customer and summed as
+      * DECIMAL — order-free and map-side combinable. A cap change
+      * builds a new table and releases the one it supersedes. */
+    def pairStats: DataFrame = synchronized {
+      val cap = maxDegree(s)
+      pairStatsAt match {
+        case Some((c, t)) if c == cap => t
+        case old =>
+          val t = pin(custPostings(s, cs)
+            .filter(size(col("ss")) >= 2)
+            .withColumn("w",
+              round(lit(1.0) / log(size(col("ss")).cast("double")), 12)
+                .cast("decimal(20,12)"))
+            .select(col("w"), sortedPairs)
+            .select(col("p.s1"), col("p.s2"), col("w"))
+            .groupBy("s1", "s2")
+            .agg(count(lit(1)).as("co"), sum(col("w")).as("aa_sum"))
+            .persist())
+          old.foreach { case (_, o) => pinned -= o; o.unpersist() }
+          pairStatsAt = Some((cap, t))
+          t
+      }
+    }
+
+    /** [[graphComponents]]' propagation index over the bulk subgraph
+      * (quantity ≥ 50 ∧ discount ≥ 0.08: sparse enough to fragment, so
+      * the canonical-label compare is not vacuous): `hopEdges` = edges
+      * ∪ [[twoHopCapped]] edges², dst-keyed, and the singleton label
+      * table, node-keyed, both checkpointed. The 2-hop edges move the
+      * minimum two hops per round; the cap keeps the squaring linear in
+      * |E| under skew, and hubs still propagate one hop through the
+      * edges themselves, so the fixpoint is unchanged. The width comes
+      * from the cap·|E| bound on the expansion, while the core floor
+      * arms on the realized edge count. */
+    lazy val cc: (DataFrame, DataFrame) = {
+      val edges = symmetric(custSupp(s, d,
+        col("l_quantity") >= 50 && col("l_discount") >= 0.08)).persist()
+      val nEdges = edges.count()
+      val parts = math.max(dataParts(nEdges * 33L, 1),
+        math.min(s.sparkContext.defaultParallelism.toLong,
+          nEdges / 8192L).toInt)
+      val hopEdges = pin(edges.union(twoHopCapped(edges, 32))
+        .distinct().repartition(parts, col("dst")).localCheckpoint())
+      val l0 = pin(hopEdges.select(col("src").as("node")).distinct()
+        .withColumn("label", col("node"))
+        .repartition(parts, col("node"))
+        .localCheckpoint())
+      edges.unpersist()
+      (hopEdges, l0)
+    }
+
+    /** The bulk co-occurrence graph (quantity ≥ 46) of
+      * [[graphTriangles]] and [[graphClustCoeff]]: its undirected edges
+      * (persisted) and [[triangleTable]]. */
+    lazy val bulkTriangles: (DataFrame, DataFrame) = {
+      val und = pin(coEdges(custSupp(s, d, col("l_quantity") >= 46))
+        .persist())
+      (und, pin(triangleTable(und)))
+    }
+
+    /** The sparser co-occurrence graph (quantity ≥ 48) of
+      * [[graphBridges]]: its undirected edges (checkpointed: census,
+      * anti-join, degree and totals all read it) and [[triangleTable]]. */
+    lazy val bridgeTriangles: (DataFrame, DataFrame) = {
+      val und = pin(coEdges(custSupp(s, d, col("l_quantity") >= 48))
+        .localCheckpoint())
+      (und, pin(triangleTable(und)))
+    }
+
+    /** The 4-round synchronous LPA labels `(node, lab)` of
+      * [[graphCommunities]] and [[graphModularity]], the last round
+      * checkpointed. */
+    lazy val lpaLabels: DataFrame = {
+      val (edgesDeg, deg, _) = edges
+      val e = edgesDeg.select(col("src"), col("dst"))
+      var labels = deg.select(col("src").as("node"))
+        .withColumn("lab", col("node"))
+        .localCheckpoint()
+      for (_ <- 1 to 4) {
+        // join keyed on src (the index's partitioning; the edge set is
+        // symmetric, so collecting neighbor labels via src and emitting
+        // dst equals the dst-keyed form)
+        labels = e.join(labels, e("src") === labels("node"))
+          .select(e("dst").as("node"), col("lab"))
+          .groupBy("node", "lab").agg(count(lit(1)).as("c"))
+          .groupBy("node")
+          .agg(min(struct((-col("c")).as("nc"), col("lab").as("l"))).as("m"))
+          .select(col("node"), col("m.l").as("lab"))
+          .localCheckpoint()
+      }
+      pin(labels)
+    }
+
+    /** The symmetric edge list [[graphKcore]] peels, checkpointed. Its
+      * gate (quantity ≥ 48 ∧ discount ≥ 0.06) is wider than
+      * [[cc]]'s, whose tree-like graph has an empty 2-core: this one
+      * keeps a real core, and the peel converges within 6 rounds at
+      * both test scale factors. */
+    lazy val kcoreEdges: DataFrame =
+      pin(symmetric(custSupp(s, d,
+        col("l_quantity") >= 48 && col("l_discount") >= 0.06))
+        .localCheckpoint())
+
+    /** Two persisted copies of the directed projection for
+      * [[graphHits]], hash-partitioned by `sk` and by `c`: each
+      * half-round joins the copy partitioned on its JOIN key, so the
+      * edge table never re-shuffles under any join strategy, and the
+      * cross-key aggregate shuffles only map-side partials. */
+    lazy val hits: (DataFrame, DataFrame) =
+      (pin(cs.repartition(col("sk")).persist()),
+        pin(cs.repartition(col("c")).persist()))
+  }
+
+  /** The one graph memo: a [[GraphIndex]] per (session, dataset).
+    * Evicting it releases every block the index pinned. */
+  private val indexes = new graft.SessionCache[GraphIndex](_.release())
+
+  private def index(s: SparkSession, d: String): GraphIndex =
+    indexes.getOrCompute(s, d)(new GraphIndex(s, d))
+
+  /** The frames the (session, dataset) graph index has built so far. */
+  private[graft] def indexArtifacts(s: SparkSession, d: String)
+      : Seq[DataFrame] = index(s, d).built
 
   /** PageRank over the customer↔supplier trading graph (who-trades-
     * with-whom influence): damping 0.85, 5 fixed iterations.
@@ -175,7 +373,7 @@ object GraphOps {
   def graphPagerank(s: SparkSession, d: String): DataFrame = {
     val damping = 0.85
     val iters = 5
-    val (edgesDeg, deg, nNodes) = edgeIndex(s, d)
+    val (edgesDeg, deg, nNodes) = index(s, d).edges
     // literal 0.15, NOT 1.0 - 0.85: the Scala subtraction yields
     // 0.15000000000000002 while the oracle parses "0.15" — last-ulp skew
     val base = 0.15 / nNodes
@@ -219,7 +417,7 @@ object GraphOps {
     * happens on bit-identical ranks. */
   def graphPpr(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val (edgesDeg, _, _) = edgeIndex(s, d)
+    val (edgesDeg, _, _) = index(s, d).edges
     // Scala-double literals, NOT expr("1.0 / 3.0"): Spark parses that
     // as DECIMAL(2,1) division (= 0.333333, a 1e-6 truncation that
     // leaks 8.5e-7 of rank mass per round); the oracle's 1.0/3.0 is
@@ -261,10 +459,44 @@ object GraphOps {
     * the marginal cost is one hash agg over the NODE-sized degree
     * table. */
   def graphDegree(s: SparkSession, d: String): DataFrame = {
-    val (_, deg, _) = edgeIndex(s, d)
+    val (_, deg, _) = index(s, d).edges
     deg.groupBy(substring(col("src"), 1, 1).as("kind"), col("outdeg"))
       .agg(count(lit(1)).as("n_nodes"))
       .orderBy(col("kind"), col("outdeg"))
+  }
+
+  /** Bounded multi-seed BFS, the engine behind [[graphPaths]],
+    * [[graphCloseness]] and [[graphDiameter]]. State is the (seed,
+    * node, dist) visited set; each hop is one frontier⋈edges shuffle
+    * join (edges pre-partitioned by src in the index) + one anti-join
+    * against the visited set. The per-hop lineage cut and the
+    * emptiness probe are one action: the frontier is lazily
+    * `localCheckpoint(false)`-marked and `count()` both materializes
+    * the checkpoint and returns the early-exit signal. The visited set
+    * is a union of ≤ hops checkpointed frontiers (shallow lineage), so
+    * it needs no checkpoint of its own. */
+  private def bfs(edges: DataFrame, seeds: DataFrame, hops: Int)
+      : DataFrame = {
+    var reached = seeds
+    var frontier = seeds
+    var k = 1
+    var growing = true
+    while (k <= hops && growing) {
+      val next = edges
+        .join(frontier.select(col("seed"), col("node")),
+          edges("src") === col("node"))
+        .select(col("seed"), col("dst").as("node")).distinct()
+        .join(reached.select(col("seed").as("s2"),
+            col("node").as("seen")),
+          col("seed") === col("s2") && col("node") === col("seen"),
+          "left_anti")
+        .select(col("seed"), col("node"), lit(k).as("dist"))
+        .localCheckpoint(false)
+      growing = next.count() > 0 // materializes + probes in one job
+      if (growing) { frontier = next; reached = reached.union(next) }
+      k += 1
+    }
+    reached
   }
 
   /** K-hop BFS shortest-path lengths from a seed node over the trading
@@ -290,70 +522,8 @@ object GraphOps {
     * MIN(dist) — identical to first-touch BFS levels. The seed row is
     * emitted unconditionally (matching the recursive anchor) so both
     * engines agree even if the seed traded nothing. */
-  /** Shared bounded-BFS engine behind [[graphPaths]],
-    * [[graphCloseness]] and [[graphDiameter]] (round-6 ask: ONE
-    * engine, fewer fatter jobs). State is the multi-seed (seed, node,
-    * dist) visited set; each hop is one frontier⋈edges shuffle join
-    * (edges pre-partitioned by src in the memoized index) + one
-    * anti-join against the visited set. The per-hop lineage cut AND
-    * the emptiness probe are ONE action: the frontier is lazily
-    * `localCheckpoint(false)`-marked and `count()` both materializes
-    * the checkpoint and returns the early-exit signal — the old
-    * eager-checkpoint-then-isEmpty pair cost two jobs per hop. The
-    * visited set is a union of ≤ hops checkpointed frontiers (shallow
-    * lineage), so it needs no checkpoint of its own. */
-  private def bfs(edges: DataFrame, seeds: DataFrame, hops: Int)
-      : DataFrame = {
-    var reached = seeds
-    var frontier = seeds
-    var k = 1
-    var growing = true
-    while (k <= hops && growing) {
-      val next = edges
-        .join(frontier.select(col("seed"), col("node")),
-          edges("src") === col("node"))
-        .select(col("seed"), col("dst").as("node")).distinct()
-        .join(reached.select(col("seed").as("s2"),
-            col("node").as("seen")),
-          col("seed") === col("s2") && col("node") === col("seen"),
-          "left_anti")
-        .select(col("seed"), col("node"), lit(k).as("dist"))
-        .localCheckpoint(false)
-      growing = next.count() > 0 // materializes + probes in one job
-      if (growing) { frontier = next; reached = reached.union(next) }
-      k += 1
-    }
-    reached
-  }
-
-  /** The 6-hop multi-seed BFS ball over the fixed panel seeds c1–c5 —
-    * ONE walk shared by [[graphPaths]] (seed c1, dist ≤ 3),
-    * [[graphCloseness]] (all seeds, dist ≤ 3) and [[graphDiameter]]'s
-    * first sweep (seed c1, full radius). BFS level sets are
-    * hop-budget-independent (dist ≤ k rows of a 6-hop walk ≡ the k-hop
-    * walk), so the three consumers read the same artifact instead of
-    * re-walking: round-9 fuse — previously paths + closeness +
-    * diameter-sweep-1 each paid their own per-hop job chain over the
-    * same edge index. Memoized per (session, dataset) and persisted
-    * like the edge index itself; the union of ≤ 6 checkpointed
-    * frontiers is shallow-lineage, so persist (not checkpoint) is
-    * enough to stop consumers re-running the hop chain. */
-  private val ballCache = new graft.SessionCache[DataFrame](df => {
-    df.unpersist(); ()
-  })
-
-  private def seedBall(s: SparkSession, d: String): DataFrame =
-    ballCache.getOrCompute(s, d) {
-      import s.implicits._
-      val (edgesDeg, _, _) = edgeIndex(s, d)
-      val edges = edgesDeg.select(col("src"), col("dst"))
-      val seeds = Seq("c1", "c2", "c3", "c4", "c5").toDF("seed")
-        .select(col("seed"), col("seed").as("node"), lit(0).as("dist"))
-      bfs(edges, seeds, hops = 6).persist()
-    }
-
   def graphPaths(s: SparkSession, d: String): DataFrame =
-    seedBall(s, d).filter(col("seed") === "c1" && col("dist") <= 3)
+    index(s, d).ball.filter(col("seed") === "c1" && col("dist") <= 3)
       .select(col("node"), col("dist"))
       .orderBy(col("node"))
 
@@ -363,17 +533,16 @@ object GraphOps {
     * the ball. The hop bound is what makes closeness computable at
     * scale (exact closeness needs all-pairs distances); with a
     * symmetric bipartite graph diameter is small anyway, so even the
-    * 3-ball is near-global (round-6 trim: the 4th round bought almost
-    * no new nodes, only bench-noise cross-section) — the panel states
-    * exactly what it measured.
+    * 3-ball is near-global — the panel states exactly what it
+    * measured.
     *
-    * 100 TB posture: reads the shared [[seedBall]] artifact (one
+    * 100 TB posture: reads the index's shared ball (one
     * [[bfs]] walk for paths/closeness/diameter — all seeds riding one
     * keyed frontier, one lazy-checkpoint+count action per hop); state
     * is (seed, node) pairs, bounded by seeds × nodes. Distances and
     * counts are exact integers; closeness is one final division. */
   def graphCloseness(s: SparkSession, d: String): DataFrame = {
-    seedBall(s, d).filter(col("dist") <= 3).groupBy("seed")
+    index(s, d).ball.filter(col("dist") <= 3).groupBy("seed")
       .agg((count(lit(1)) - 1).as("n_reached"),
         sum("dist").as("sum_dist"))
       .select(col("seed"), col("n_reached"), col("sum_dist"),
@@ -389,20 +558,16 @@ object GraphOps {
     * (deterministic argmax tie-break), and report the second sweep's
     * eccentricity — on real graphs this is usually the exact diameter,
     * always a certified lower bound (the panel says which). Sweep 1
-    * reads the shared [[seedBall]] artifact (round-9 fuse; the c1 walk
-    * is paid once across paths/closeness/diameter), so only the
+    * reads the index's shared ball (the c1 walk is paid once across
+    * paths/closeness/diameter), so only the
     * restart sweep runs a fresh [[bfs]] — one lazy-checkpoint+count
     * action per hop; the only driver-side values are the restart node
     * and the final panel (bounded scalars). */
   def graphDiameter(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val (edgesDeg, _, _) = edgeIndex(s, d)
-    val edges = edgesDeg.select(col("src"), col("dst"))
-
-    // sweep 1 rides the shared panel ball (round-9 fuse): the c1 walk
-    // is already materialized for paths/closeness, so diameter pays
-    // only the restart sweep
-    val first = seedBall(s, d).filter(col("seed") === "c1")
+    val ix = index(s, d)
+    val edges = ix.edges._1.select(col("src"), col("dst"))
+    val first = ix.ball.filter(col("seed") === "c1")
       .select(col("node"), col("dist"))
     val far = first.orderBy(col("dist").desc, col("node").asc)
       .limit(1).collect().head.getString(0) // bounded driver scalar
@@ -440,7 +605,7 @@ object GraphOps {
     * action anywhere (fixed round count, no convergence probe). */
   def graphBetweenness(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val (edgesDeg, _, _) = edgeIndex(s, d)
+    val (edgesDeg, _, _) = index(s, d).edges
     val edges = edgesDeg.select(col("src"), col("dst"))
     val termExpr =
       "cast(floor(cast(sv as double) / cast(sw as double)" +
@@ -506,64 +671,25 @@ object GraphOps {
     * bit-reproducible across runs, engines, and partitionings, which
     * is what makes a 100 TB walk corpus auditable at all.
     *
-    * One per-src neighbor-rank window over the memoized edge index
+    * One per-src neighbor-rank window over the index's edge list
     * (keyed partition — scale-safe), then 4 bounded join rounds
     * (frontier is |starts| rows, the rank-match join is one hash
     * probe per walker); a start panel of 20 customers, walks die out
     * at isolated nodes (step-0 row still reported). */
   def graphWalks(s: SparkSession, d: String): DataFrame =
-    walksTable(s, d).orderBy(col("start"), col("step"))
-
-  /** The unordered walk rows behind [[graphWalks]] and
-    * [[graphWalkPairs]], memoized per (session, dataset): both
-    * consumers share one build, and the build itself materializes
-    * aggressively — the neighbor-rank window is localCheckpoint'd
-    * ONCE (lazily-referenced, it used to re-execute ~10× across the
-    * unioned frontier lineage: round k's plan re-derived rounds
-    * 1..k-1, ×2 again in walk_pairs' self-join), and each frontier
-    * round (≤20 walker rows) cuts its lineage so the returned union
-    * is a union of materialized RDDs, not a re-derivable plan. */
-  private val walksCache = new graft.SessionCache[DataFrame]()
-
-  private def walksTable(s: SparkSession, d: String): DataFrame =
-    walksCache.getOrCompute(s, d) {
-      import s.implicits._
-      val (edgesDeg, _, _) = edgeIndex(s, d)
-      val nb = edgesDeg.withColumn("rn",
-        row_number().over(Window.partitionBy("src").orderBy("dst")))
-        .localCheckpoint()
-      val starts = (1 to 20).map(i => s"c$i").toDF("start")
-      var frontier = starts
-        .select(col("start"), col("start").as("node"), lit(0).as("step"))
-        .localCheckpoint()
-      var acc = frontier
-      for (k <- 1 to 4) {
-        // fresh alias per round: the frontier already carries nb lineage
-        val n = s"nb$k"
-        frontier = frontier.as("w")
-          .join(nb.as(n), col("w.node") === col(s"$n.src")
-            && (conv(substring(md5(concat(col("w.start"), lit(s":$k:"),
-                col("w.node"))), 1, 8), 16, 10).cast("long")
-              % col(s"$n.outdeg")) + 1 === col(s"$n.rn"))
-          .select(col("w.start").as("start"),
-            col(s"$n.dst").as("node"), lit(k).as("step"))
-          .localCheckpoint()
-        acc = acc.unionAll(frontier)
-      }
-      acc
-    }
+    index(s, d).walks.orderBy(col("start"), col("step"))
 
   /** T176: skip-gram (center, context) pair extraction from the
     * deterministic walks — the actual training corpus DeepWalk/
     * node2vec feeds to word2vec: every DIRECTED pair of walk nodes at
     * distance 1..2 within the same walk, counted. Composed on
-    * [[walksTable]] by one walk-keyed self-join (walk ids are the
+    * the index's walk rows by one walk-keyed self-join (walk ids are the
     * join key, so the pair expansion is per-walk bounded — window·L
     * pairs per walk, never corpus-quadratic). */
   def graphWalkPairs(s: SparkSession, d: String): DataFrame = {
-    // the memoized walk panel is already a union of checkpointed
-    // frontiers — both self-join sides replay only the cheap union
-    val wa = walksTable(s, d)
+    // the walk rows are a union of checkpointed frontiers — both
+    // self-join sides replay only the cheap union
+    val wa = index(s, d).walks
     wa.as("a")
       .join(wa.as("b"), col("a.start") === col("b.start")
         && abs(col("a.step") - col("b.step")).between(1, 2))
@@ -594,50 +720,13 @@ object GraphOps {
     * degree cap (`spark.graft.graph.maxDegree`): capped, co-counts
     * become documented lower bounds while degrees stay exact, so
     * jaccard is conservative; default unlimited so the oracle replays
-    * the exact expansion at test scale. The bipartite projection
-    * itself is the memoized [[csIndex]] artifact (one build per
-    * session × dataset across the graph suite). Top-k via sort+limit =
-    * TakeOrdered, no full sort. */
-  /** Shared supplier-pair aggregate over the capped postings: the
-    * co-occurrence count AND the Adamic–Adar decimal weight sum from
-    * ONE pair expansion, memoized per (session, dataset, degree cap) —
-    * [[graphCooccur]] and [[graphLinkpred]] both consume it, so the
-    * projection's pair volume (the single most expensive computation
-    * in the graph suite) is paid once, like the shingle/IVF/edge
-    * index artifacts. The AA weight 1/ln(deg_c) is quantized to the
-    * 1e-12 grid ONCE per customer (per-row double op, identical both
-    * engines) and summed as DECIMAL — order-free, plain map-side-
-    * combinable aggregate on the ≤|suppliers|² pair key space. */
-  private val pairStatsCache = new graft.SessionCache[DataFrame](df => {
-    df.unpersist(); ()
-  })
-
-  private def pairStats(s: SparkSession, d: String): DataFrame = {
-    val key = s"$d#cap=${maxDegree(s)}"
-    val built = pairStatsCache.getOrCompute(s, key) {
-      custPostings(s, csIndex(s, d))
-        .filter(size(col("ss")) >= 2)
-        .withColumn("w",
-          round(lit(1.0) / log(size(col("ss")).cast("double")), 12)
-            .cast("decimal(20,12)"))
-        .select(col("w"), explode(expr(
-          """flatten(transform(ss, (a, i) ->
-            |  transform(slice(ss, i + 2, size(ss)), b ->
-            |    struct(a AS s1, b AS s2))))""".stripMargin)).as("p"))
-        .select(col("p.s1"), col("p.s2"), col("w"))
-        .groupBy("s1", "s2")
-        .agg(count(lit(1)).as("co"), sum(col("w")).as("aa_sum"))
-        .persist()
-    }
-    // a cap change supersedes the old pair table — drop its blocks
-    pairStatsCache.evictSiblings(s, s"$d#cap=", key)
-    built
-  }
-
+    * the exact expansion at test scale. The pair counts are the
+    * index's `pairStats`, shared with [[graphLinkpred]]. Top-k via
+    * sort+limit = TakeOrdered, no full sort. */
   def graphCooccur(s: SparkSession, d: String): DataFrame = {
-    val cs = csIndex(s, d)
-    val deg = cs.groupBy("sk").agg(count(lit(1)).as("deg"))
-    pairStats(s, d).select("s1", "s2", "co")
+    val ix = index(s, d)
+    val deg = ix.cs.groupBy("sk").agg(count(lit(1)).as("deg"))
+    ix.pairStats.select("s1", "s2", "co")
       .join(deg.select(col("sk").as("s1"), col("deg").as("deg1")), Seq("s1"))
       .join(deg.select(col("sk").as("s2"), col("deg").as("deg2")), Seq("s2"))
       .select(col("s1"), col("s2"), col("co"),
@@ -648,36 +737,6 @@ object GraphOps {
       .limit(20)
   }
 
-  /** Connected components of the high-quantity trading subgraph (who
-    * is transitively linked to whom through bulk orders) — the entity-
-    * resolution primitive behind every "same cluster?" question the
-    * reference's graph answers by walking Neo4j paths; `dedup_clusters`
-    * uses the same idea over MinHash pairs, this is the general graph
-    * form over a relational edge derivation.
-    *
-    * Algorithm: min-label propagation PLUS pointer jumping — each
-    * round first takes l(v) ← min(l(v), min over neighbors l(u)) (one
-    * edges⋈labels shuffle join + one hash agg), then short-circuits
-    * l(v) ← l(l(v)) (one node-sized self-join), doubling the effective
-    * propagation distance per round: convergence in O(log diameter)
-    * rounds, not O(diameter). The loop runs to an OBSERVED fixpoint —
-    * with a hard cap of 20 rounds. Convergence is detected WITHOUT a
-    * dedicated per-round join: each node's previous label rides the
-    * propagation agg as a `max`-folded side column (unique non-null
-    * per node, so the fold is exact), and the changed-any flag is one
-    * narrow `max(label != old)` scan over the round's already-
-    * checkpointed node table, taken BEFORE the pointer jump (round-9:
-    * a no-change propagation round proves every edge already has
-    * l(u)=l(v), i.e. global convergence — so the final round exits
-    * without paying its jump self-join at all).
-    *
-    * 100 TB posture: per round two shuffles on node keys + one
-    * node-sized join; `localCheckpoint` truncates lineage per round
-    * (swap for reliable checkpoint on a cluster). Labels are node ids,
-    * so the label table never exceeds the node table. The component id
-    * is the lexicographic min node id — canonical and engine-agnostic.
-    * Exact integers + string min ⇒ no FP pinning needed; the oracle
-    * replays reachability with a recursive CTE and takes MIN(label). */
   /** Degree-capped 2-hop edge expansion — the scale guard in front of
     * [[graphComponents]]' edges² composition. `edges` must be the
     * SYMMETRIC edge list (both directions present), so per-src row
@@ -701,78 +760,39 @@ object GraphOps {
       .filter(col("src") =!= col("dst"))
   }
 
-  /** The gated bulk-subgraph propagation index behind
-    * [[graphComponents]] — (hopEdges = edges ∪ capped edges²,
-    * dst-keyed; the singleton label init, node-keyed) — memoized per
-    * (session, dataset) like [[edgeIndex]]/[[seedBall]] (r13: the
-    * corpus join + distinct + 2-hop expansion + two checkpoints were
-    * rebuilt on every call — profiled ~2 s of graph_cc's 5.5 s;
-    * the label-propagation LOOP itself still runs per call). */
-  // onEvict keeps the cache contract uniform with csCache/hitsIndex
-  // (r13 ADVICE); localCheckpoint blocks additionally fall to the
-  // bench cold sweep's getPersistentRDDs pass
-  private val ccIndexCache =
-    new graft.SessionCache[(DataFrame, DataFrame)](v => {
-      v._1.unpersist(); v._2.unpersist(); ()
-    })
-
-  private def ccIndex(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    ccIndexCache.getOrCompute(s, d) {
-      val ord = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
-      // full-quantity deep-discount lineitems: sparse enough to
-      // fragment (65 components over 369 nodes at sf0.01) — a giant
-      // component would make the canonical-label compare vacuous
-      val li = Tables.lineitem(s, d)
-        .filter(col("l_quantity") >= 50 && col("l_discount") >= 0.08)
-        .select(col("l_orderkey"), col("l_suppkey"))
-      val pairs = li.join(ord, li("l_orderkey") === ord("o_orderkey"))
-        .select(concat(lit("c"), col("o_custkey")).as("src"),
-          concat(lit("s"), col("l_suppkey")).as("dst"))
-        .distinct()
-      val edges = pairs.union(
-        pairs.select(col("dst").as("src"), col("src").as("dst")))
-        .persist()
-      // 2-hop propagation edges (round-9): the bulk subgraph chained
-      // ~15 single-hop rounds at sf0.1 with per-round cost dominated by
-      // fixed job latency, not data — propagating the min over
-      // edges ∪ edges² moves it two hops per round and halves the round
-      // count for one extra up-front join. Round-10 writes the
-      // HUB-DEGREE CAP the squaring needs at cluster scale: a node of
-      // degree d contributes d² two-hop pairs, so one power-law hub
-      // makes edges² quadratic in its degree — [[twoHopCapped]] keeps
-      // only pivots with degree ≤ 32, bounding the expansion to
-      // O(cap·|E|) REGARDLESS of skew; hub rows still propagate 1-hop
-      // through `edges` itself, so the fixpoint is identical (2-hop
-      // edges are pure accelerators — any subset preserves the closure).
-      // Probe semantics are unchanged: a zero-delta round under the
-      // WIDER edge set is a fortiori stable on the 1-hop edges, which
-      // is the convergence certificate.
-      // The loop artifacts are BULK-SUBGRAPH-sized, not corpus-sized —
-      // checkpoint them at [[dataParts]]' data-sized width. The 33x
-      // factor bounds the capped 2-hop expansion (≤ cap·|E| + |E|);
-      // keyed on the join columns so round 1 co-partitions both probe
-      // inputs for free.
-      // Width from the 33x-bounded estimate, but the r13 CORE floor
-      // arms on the REALIZED edge count (r13 ADVICE: evaluating the
-      // ≥8k-rows-per-task guard on the inflated estimate armed it at
-      // ~250 actual rows/task, re-introducing the round-10 task-launch
-      // overhead the guard exists to prevent).
-      val nEdges = edges.count()
-      val parts = math.max(dataParts(nEdges * 33L, 1),
-        math.min(s.sparkContext.defaultParallelism.toLong,
-          nEdges / 8192L).toInt)
-      val hopEdges = edges.union(twoHopCapped(edges, 32))
-        .distinct().repartition(parts, col("dst")).localCheckpoint()
-      val l0 = hopEdges.select(col("src").as("node")).distinct()
-        .withColumn("label", col("node"))
-        .repartition(parts, col("node"))
-        .localCheckpoint()
-      edges.unpersist()
-      (hopEdges, l0)
-    }
-
+  /** Connected components of the high-quantity trading subgraph (who
+    * is transitively linked to whom through bulk orders) — the entity-
+    * resolution primitive behind every "same cluster?" question the
+    * reference's graph answers by walking Neo4j paths; `dedup_clusters`
+    * uses the same idea over MinHash pairs, this is the general graph
+    * form over a relational edge derivation.
+    *
+    * Algorithm: min-label propagation PLUS pointer jumping — each
+    * round first takes l(v) ← min(l(v), min over neighbors l(u)) (one
+    * edges⋈labels shuffle join + one hash agg), then short-circuits
+    * l(v) ← l(l(v)) (one node-sized self-join), doubling the effective
+    * propagation distance per round: convergence in O(log diameter)
+    * rounds, not O(diameter). The loop runs to an OBSERVED fixpoint —
+    * with a hard cap of 20 rounds. Convergence is detected WITHOUT a
+    * dedicated per-round join: each node's previous label rides the
+    * propagation agg as a `max`-folded side column (unique non-null
+    * per node, so the fold is exact), and the changed-any flag is one
+    * narrow `max(label != old)` scan over the round's already-
+    * checkpointed node table, taken BEFORE the pointer jump: a
+    * no-change propagation round proves every edge already has
+    * l(u)=l(v), i.e. global convergence, so the final round exits
+    * without paying its jump self-join at all. An empty subgraph has
+    * no max (NULL), which reads as converged.
+    *
+    * 100 TB posture: per round two shuffles on node keys + one
+    * node-sized join; `localCheckpoint` truncates lineage per round
+    * (swap for reliable checkpoint on a cluster). Labels are node ids,
+    * so the label table never exceeds the node table. The component id
+    * is the lexicographic min node id — canonical and engine-agnostic.
+    * Exact integers + string min ⇒ no FP pinning needed; the oracle
+    * replays reachability with a recursive CTE and takes MIN(label). */
   def graphComponents(s: SparkSession, d: String): DataFrame = {
-    val (hopEdges, l0) = ccIndex(s, d)
+    val (hopEdges, l0) = index(s, d).cc
     var labels = l0
     var changed = true
     var round = 0
@@ -785,10 +805,10 @@ object GraphOps {
       // bfs engine's fused materialize+probe): the probe runs BEFORE
       // the pointer jump, so a zero-delta propagation round — which
       // proves every edge already has l(u)=l(v), i.e. global
-      // convergence — exits without paying its jump self-join at all
-      // (round-9 early-exit; a deeper composed jump was tried and
-      // regressed badly at sf0.1: the label-keyed probes concentrate
-      // on a few hot labels as components coalesce).
+      // convergence — exits without paying its jump self-join at all.
+      // (A deeper composed jump regressed badly at sf0.1: the
+      // label-keyed probes concentrate on a few hot labels as
+      // components coalesce.)
       val prop = hopEdges
         .join(labels, hopEdges("dst") === labels("node"))
         .select(hopEdges("src").as("node"), col("label"),
@@ -798,9 +818,9 @@ object GraphOps {
         .groupBy("node")
         .agg(min(col("label")).as("label"), max(col("old")).as("old"))
         .localCheckpoint(false)
-      changed = prop.agg(
-        max((col("label") =!= col("old")).cast("int")).as("c"))
-        .head().getInt(0) > 0
+      val probe = prop.agg(
+        max((col("label") =!= col("old")).cast("int")).as("c")).head()
+      changed = !probe.isNullAt(0) && probe.getInt(0) > 0
       if (changed) {
         // pointer jump: adopt your label's own label (always present —
         // labels only ever hold node ids). The probe above already
@@ -810,7 +830,7 @@ object GraphOps {
         // prop references `labels` TWICE (join side + union side), so
         // a lazy mark would recompute the jump join once per branch
         // inside the fused probe job — measured slower than paying
-        // the one cheap materializing count here (round-10 A/B).
+        // the one cheap materializing count here.
         labels = prop.as("a")
           .join(prop.select(col("node").as("ln"), col("label").as("ll")),
             col("a.label") === col("ln"))
@@ -827,6 +847,39 @@ object GraphOps {
         sum(when(col("node").startsWith("s"), 1).otherwise(0))
           .as("n_suppliers"))
       .orderBy(col("component"))
+  }
+
+  /** The degree-oriented triangle census over an undirected (s1 < s2)
+    * edge list — the Suri–Vassilvitskii core shared by the index's
+    * `bulkTriangles` (≥ 46 gate) and `bridgeTriangles` (≥ 48 gate).
+    * Returns one row per triangle (corners a/b/c),
+    * localCheckpoint'd (triangle-sized). */
+  private def triangleTable(und: DataFrame): DataFrame = {
+    val deg = und.select(col("s1").as("n"))
+      .union(und.select(col("s2").as("n")))
+      .groupBy("n").agg(count(lit(1)).as("deg"))
+    val withDeg = und
+      .join(deg.select(col("n").as("s1"), col("deg").as("d1")), Seq("s1"))
+      .join(deg.select(col("n").as("s2"), col("deg").as("d2")), Seq("s2"))
+    val r1 = struct(col("d1").as("dg"), col("s1").as("id"))
+    val r2 = struct(col("d2").as("dg"), col("s2").as("id"))
+    val fwd = r1 < r2
+    val oriented = withDeg.select(
+      when(fwd, col("s1")).otherwise(col("s2")).as("src"),
+      when(fwd, r2).otherwise(r1).as("dst"))
+    val wedges = oriented.groupBy("src")
+      .agg(sort_array(collect_list(col("dst"))).as("ns"))
+      .select(col("src").as("a"), explode(expr(
+        """flatten(transform(ns, (x, i) ->
+          |  transform(slice(ns, i + 2, size(ns)), y ->
+          |    struct(x.id AS b, y.id AS c))))""".stripMargin)).as("w"))
+      .select(col("a"), col("w.b"), col("w.c"))
+    val closing = oriented
+      .select(col("src").as("b"), col("dst.id").as("c"))
+    // triangle-sized (bounded by the oriented wedge census);
+    // localCheckpoint materializes it once for all consumers
+    wedges.join(closing, Seq("b", "c"), "left_semi")
+      .localCheckpoint()
   }
 
   /** Per-node triangle counts over the BULK supplier co-occurrence
@@ -861,75 +914,8 @@ object GraphOps {
     * edge-sized. Exact integers throughout, no FP pinning. The
     * orientation key is a (deg, id) STRUCT comparison, not an encoded
     * scalar — no id-range assumptions at scale. */
-  /** The bulk co-occurrence graph's undirected edge list (s1 < s2)
-    * and its triangle table (one row per triangle, corners a/b/c) —
-    * memoized per (session, dataset) like [[pairStats]], shared by
-    * [[graphTriangles]] and [[graphClustCoeff]] so the corpus join +
-    * pair expansion + oriented wedge census is paid once. */
-  private val triCache = new graft.SessionCache[(DataFrame, DataFrame)](v => {
-    v._1.unpersist(); ()
-  })
-
-  private def bulkTriangles(s: SparkSession, d: String)
-      : (DataFrame, DataFrame) =
-    triCache.getOrCompute(s, d) {
-      val ord = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
-      val li = Tables.lineitem(s, d)
-        .filter(col("l_quantity") >= 46)
-        .select(col("l_orderkey"), col("l_suppkey"))
-      val cs = li.join(ord, li("l_orderkey") === ord("o_orderkey"))
-        .select(col("o_custkey").as("c"), col("l_suppkey").as("sk"))
-        .distinct()
-      // undirected edges s1 < s2: suppliers sharing >= 2 customers,
-      // pair-expanded narrowly from sorted per-customer postings
-      val und = cs.groupBy("c")
-        .agg(sort_array(collect_list(col("sk"))).as("ss"))
-        .select(explode(expr(
-          """flatten(transform(ss, (a, i) ->
-            |  transform(slice(ss, i + 2, size(ss)), b ->
-            |    struct(a AS s1, b AS s2))))""".stripMargin)).as("p"))
-        .select(col("p.s1"), col("p.s2"))
-        .groupBy("s1", "s2").agg(count(lit(1)).as("co"))
-        .filter(col("co") >= 2).select(col("s1"), col("s2"))
-        .persist()
-      (und, triangleTable(und))
-    }
-
-  /** The degree-oriented triangle census over an undirected (s1 < s2)
-    * edge list — the Suri–Vassilvitskii core of [[bulkTriangles]],
-    * factored so [[graphBridges]] can run it over its own (sparser)
-    * edge gate. Returns one row per triangle (corners a/b/c),
-    * localCheckpoint'd (triangle-sized). */
-  private def triangleTable(und: DataFrame): DataFrame = {
-    val deg = und.select(col("s1").as("n"))
-      .union(und.select(col("s2").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("deg"))
-    val withDeg = und
-      .join(deg.select(col("n").as("s1"), col("deg").as("d1")), Seq("s1"))
-      .join(deg.select(col("n").as("s2"), col("deg").as("d2")), Seq("s2"))
-    val r1 = struct(col("d1").as("dg"), col("s1").as("id"))
-    val r2 = struct(col("d2").as("dg"), col("s2").as("id"))
-    val fwd = r1 < r2
-    val oriented = withDeg.select(
-      when(fwd, col("s1")).otherwise(col("s2")).as("src"),
-      when(fwd, r2).otherwise(r1).as("dst"))
-    val wedges = oriented.groupBy("src")
-      .agg(sort_array(collect_list(col("dst"))).as("ns"))
-      .select(col("src").as("a"), explode(expr(
-        """flatten(transform(ns, (x, i) ->
-          |  transform(slice(ns, i + 2, size(ns)), y ->
-          |    struct(x.id AS b, y.id AS c))))""".stripMargin)).as("w"))
-      .select(col("a"), col("w.b"), col("w.c"))
-    val closing = oriented
-      .select(col("src").as("b"), col("dst.id").as("c"))
-    // triangle-sized (bounded by the oriented wedge census);
-    // localCheckpoint materializes it once for all consumers
-    wedges.join(closing, Seq("b", "c"), "left_semi")
-      .localCheckpoint()
-  }
-
   def graphTriangles(s: SparkSession, d: String): DataFrame = {
-    val (_, tri) = bulkTriangles(s, d)
+    val (_, tri) = index(s, d).bulkTriangles
     tri.select(col("a").as("node"))
       .union(tri.select(col("b")))
       .union(tri.select(col("c")))
@@ -943,12 +929,12 @@ object GraphOps {
     * (Watts–Strogatz); nodes of degree < 2 have no defined coefficient
     * (NULL via try_divide, mirrored by the oracle's CASE).
     *
-    * Reads the memoized [[bulkTriangles]] artifact, so the marginal
+    * Reads the index's `bulkTriangles`, so the marginal
     * cost over [[graphTriangles]] is two node-sized aggregates and one
     * node-sized join. Counts are exact integers; lcc is one division
     * of exact operands, round 6 — bit-identical cross-engine. */
   def graphClustCoeff(s: SparkSession, d: String): DataFrame = {
-    val (und, tri) = bulkTriangles(s, d)
+    val (und, tri) = index(s, d).bulkTriangles
     val deg = und.select(col("s1").as("node"))
       .union(und.select(col("s2")))
       .groupBy("node").agg(count(lit(1)).as("degree"))
@@ -983,43 +969,8 @@ object GraphOps {
     * least/greatest (corner `a` is the degree-rank-lowest, not the
     * id-lowest). Totals ride as constant columns off two bounded
     * aggregates; exact integers throughout. */
-  /** The ≥48-gated sparse co-occurrence edge list and its triangle
-    * census for [[graphBridges]], memoized per (session, dataset) —
-    * the [[bulkTriangles]] pattern at the bridges gate (r13: the
-    * corpus join + pair expansion + oriented wedge census were
-    * rebuilt on every call; only the anti-join/degree/panel tail is
-    * per-call work). */
-  private val bridgeCache =
-    new graft.SessionCache[(DataFrame, DataFrame)](v => {
-      v._1.unpersist(); v._2.unpersist(); ()
-    })
-
-  private def bridgeIndex(s: SparkSession, d: String)
-      : (DataFrame, DataFrame) =
-    bridgeCache.getOrCompute(s, d) {
-      val ord = Tables.orders(s, d)
-        .select(col("o_orderkey"), col("o_custkey"))
-      val li = Tables.lineitem(s, d)
-        .filter(col("l_quantity") >= 48)
-        .select(col("l_orderkey"), col("l_suppkey"))
-      val cs = li.join(ord, li("l_orderkey") === ord("o_orderkey"))
-        .select(col("o_custkey").as("c"), col("l_suppkey").as("sk"))
-        .distinct()
-      val und = cs.groupBy("c")
-        .agg(sort_array(collect_list(col("sk"))).as("ss"))
-        .select(explode(expr(
-          """flatten(transform(ss, (a, i) ->
-            |  transform(slice(ss, i + 2, size(ss)), b ->
-            |    struct(a AS s1, b AS s2))))""".stripMargin)).as("p"))
-        .select(col("p.s1"), col("p.s2"))
-        .groupBy("s1", "s2").agg(count(lit(1)).as("co"))
-        .filter(col("co") >= 2).select(col("s1"), col("s2"))
-        .localCheckpoint() // 4 consumers (census, anti, degree, totals)
-      (und, triangleTable(und))
-    }
-
   def graphBridges(s: SparkSession, d: String): DataFrame = {
-    val (und, tri) = bridgeIndex(s, d)
+    val (und, tri) = index(s, d).bridgeTriangles
     val te = tri.select(least(col("a"), col("b")).as("s1"),
         greatest(col("a"), col("b")).as("s2"))
       .union(tri.select(least(col("a"), col("c")),
@@ -1054,7 +1005,7 @@ object GraphOps {
     * of each customer's sorted supplier list (never a bucket
     * self-join), the weight 1/ln(deg) is computed once per customer
     * from that row's own list size, and only (s1, s2, w) rides the
-    * pair shuffle. Reads the memoized [[csIndex]] projection and rides
+    * pair shuffle. Reads the index's `pairStats` and rides
     * [[custPostings]]' hub-degree cap (`spark.graft.graph.maxDegree`,
     * default unlimited): capped, a hub customer contributes only its
     * smallest-`cap` suppliers, so AA scores are lower bounds and the
@@ -1065,9 +1016,9 @@ object GraphOps {
     * score with a unique (s1, s2) tiebreak. */
   def graphLinkpred(s: SparkSession, d: String): DataFrame =
     // FP determinism via the exact-DECIMAL idiom, not a sorted fold
-    // (order-free quantized weight sum — see [[pairStats]], which also
-    // makes this query and graphCooccur share ONE pair expansion)
-    pairStats(s, d)
+    // (order-free quantized weight sum — the index's pairStats, which
+    // also makes this query and graphCooccur share ONE pair expansion)
+    index(s, d).pairStats
       .select(col("s1"), col("s2"), col("co").as("n_common"),
         round(col("aa_sum").cast("double"), 6).as("aa"))
       .orderBy(col("aa").desc, col("s1").asc, col("s2").asc)
@@ -1088,41 +1039,10 @@ object GraphOps {
     * iterative shape as [[graphPagerank]]; `localCheckpoint` truncates
     * lineage per round; labels stay node-sized. The argmax is
     * `min(struct(-count, label))`, a partial-aggregable single pass —
-    * no per-node window. Reads the memoized [[edgeIndex]], so the
-    * edge table is shared with the rest of the suite. */
-  /** The 4-round sync-LPA label table (node, lab) shared by
-    * [[graphCommunities]] and [[graphModularity]] — memoized per
-    * (session, dataset) like the edge index so the two consumers pay
-    * the 8 label-propagation joins once. localCheckpoint already
-    * materialized the rounds; the cache only pins the final table. */
-  private val lpaCache = new graft.SessionCache[DataFrame](_ => ())
-
-  private def lpaLabels(s: SparkSession, d: String): DataFrame =
-    lpaCache.getOrCompute(s, d) { lpaLabelsBuild(s, d) }
-
-  private def lpaLabelsBuild(s: SparkSession, d: String): DataFrame = {
-    val (edgesDeg, deg, _) = edgeIndex(s, d)
-    val edges = edgesDeg.select(col("src"), col("dst"))
-    var labels = deg.select(col("src").as("node"))
-      .withColumn("lab", col("node"))
-      .localCheckpoint()
-    for (_ <- 1 to 4) {
-      // join keyed on src (the index's persisted partitioning; the
-      // edge set is symmetric, so collecting neighbor labels via src
-      // and emitting dst is identical to the dst-keyed form)
-      labels = edges.join(labels, edges("src") === labels("node"))
-        .select(edges("dst").as("node"), col("lab"))
-        .groupBy("node", "lab").agg(count(lit(1)).as("c"))
-        .groupBy("node")
-        .agg(min(struct((-col("c")).as("nc"), col("lab").as("l"))).as("m"))
-        .select(col("node"), col("m.l").as("lab"))
-        .localCheckpoint()
-    }
-    labels
-  }
-
+    * no per-node window. The labels are the index's `lpaLabels`,
+    * shared with [[graphModularity]]. */
   def graphCommunities(s: SparkSession, d: String): DataFrame =
-    lpaLabels(s, d).groupBy(col("lab").as("community"))
+    index(s, d).lpaLabels.groupBy(col("lab").as("community"))
       .agg(count(lit(1)).as("n_nodes"),
         sum(when(col("node").startsWith("c"), 1).otherwise(0))
           .as("n_customers"))
@@ -1137,12 +1057,13 @@ object GraphOps {
     * ONE fixed double expression. No double is ever summed across
     * partitions, so the result is bit-stable cross-engine.
     *
-    * 100 TB posture: reuses [[lpaLabels]] (memoized edge index + 4
-    * checkpointed rounds), then two label joins and two aggregates —
+    * 100 TB posture: reuses the index's LPA labels (4 checkpointed
+    * rounds over its edge list), then two label joins and two aggregates —
     * all keyed shuffles on node/community ids. */
   def graphModularity(s: SparkSession, d: String): DataFrame = {
-    val (edgesDeg, deg, _) = edgeIndex(s, d)
-    val lbl = lpaLabels(s, d)
+    val ix = index(s, d)
+    val (edgesDeg, deg, _) = ix.edges
+    val lbl = ix.lpaLabels
     val e2 = edgesDeg.select(col("src"), col("dst"))
       .join(lbl.select(col("node").as("src"), col("lab").as("lsrc")), "src")
       .join(lbl.select(col("node").as("dst"), col("lab").as("ldst")), "dst")
@@ -1167,8 +1088,8 @@ object GraphOps {
           .as("modularity"))
   }
 
-  /** k-core peeling over the bulk trading subgraph (same gated edge
-    * derivation as [[graphComponents]]): repeatedly drop nodes with
+  /** k-core peeling over the bulk trading subgraph (the index's
+    * `kcoreEdges`, quantity ≥ 48 ∧ discount ≥ 0.06): repeatedly drop nodes with
     * fewer than k=2 surviving neighbors — the standard graph-mining
     * densification filter (cores survive, pendant chains and stars
     * peel away). Runs a FIXED 6 peel rounds so the unrolled-CTE oracle
@@ -1183,33 +1104,6 @@ object GraphOps {
     * 100 TB posture: per round one edges⋈nodes semi-join per endpoint
     * + one hash agg — node-keyed shuffles only; `localCheckpoint`
     * bounds lineage; the survivor table shrinks monotonically. */
-  /** The ≥48/≥0.06-gated symmetric edge list [[graphKcore]] peels,
-    * memoized per (session, dataset) (r13: the corpus join + distinct
-    * + symmetrize + checkpoint were rebuilt per call; the 6 peel
-    * rounds are per-call work). */
-  private val kcoreEdgeCache =
-    new graft.SessionCache[DataFrame](df => { df.unpersist(); () })
-
-  private def kcoreEdges(s: SparkSession, d: String): DataFrame =
-    kcoreEdgeCache.getOrCompute(s, d) {
-      val ord = Tables.orders(s, d)
-        .select(col("o_orderkey"), col("o_custkey"))
-      // a slightly wider gate than graphComponents' (>=50, >=0.08):
-      // that graph is tree-like (empty 2-core — vacuous); this one
-      // keeps a real core (sf0.01: 534 of 1033 nodes survive) and the
-      // peel CONVERGES by round 6 at both test SFs (probed: n6 == n8)
-      val li = Tables.lineitem(s, d)
-        .filter(col("l_quantity") >= 48 && col("l_discount") >= 0.06)
-        .select(col("l_orderkey"), col("l_suppkey"))
-      val pairs = li.join(ord, li("l_orderkey") === ord("o_orderkey"))
-        .select(concat(lit("c"), col("o_custkey")).as("src"),
-          concat(lit("s"), col("l_suppkey")).as("dst"))
-        .distinct()
-      pairs.union(
-        pairs.select(col("dst").as("src"), col("src").as("dst")))
-        .localCheckpoint()
-    }
-
   def graphKcore(s: SparkSession, d: String): DataFrame = {
     val k = 2
     val rounds = 6
@@ -1218,7 +1112,7 @@ object GraphOps {
     // current survivors — node sets are monotone decreasing, so
     // progressive restriction ≡ restricting to the latest set, and
     // later rounds scan strictly smaller checkpointed tables
-    var cur = kcoreEdges(s, d)
+    var cur = index(s, d).kcoreEdges
     var nodes: DataFrame = null
     for (i <- 1 to rounds) {
       if (i > 1) {
@@ -1252,11 +1146,11 @@ object GraphOps {
     * .profileCorr]] pattern on graph data. try_divide NULLs a
     * degenerate regular graph (zero degree variance).
     *
-    * 100 TB posture: reads the memoized [[edgeIndex]] (deg(src)
+    * 100 TB posture: reads the index's edge list (deg(src)
     * already attached), one node-sized join attaches deg(dst), one
     * 1-row aggregate — no new shuffle beyond the dst join. */
   def graphAssortativity(s: SparkSession, d: String): DataFrame = {
-    val (edgesDeg, deg, _) = edgeIndex(s, d)
+    val (edgesDeg, deg, _) = index(s, d).edges
     val dd = deg.select(col("src").as("dst"), col("outdeg").as("indeg"))
     def big(c: Column): Column = c.cast("decimal(18,0)")
     val a = edgesDeg.join(dd, Seq("dst"))
@@ -1285,42 +1179,15 @@ object GraphOps {
     * convention — scores are max-normalized into [0, 1], so the grid
     * keeps 15 significant digits; no collect_list buffering).
     *
-    * 100 TB posture: reads the memoized [[csIndex]] projection; each
+    * 100 TB posture: reads the index's two partitioned copies of the
+    * projection (joined on the key each copy is partitioned by); each
     * round is two key-shuffled aggregates + two joins with
     * localCheckpoint lineage cuts; the max is a 1-row broadcast. Same
     * iterative posture as pagerank — rounds are fixed (2; rank-stable
     * vs round 3 at every test SF, hand-pinned in Round6bOpsSpec),
     * state is node-sized. */
-  /** Two pre-partitioned persisted copies of the directed projection
-    * for [[graphHits]]: hash-partitioned by `c` (authority rounds
-    * JOIN on it) and by `sk` (hub rounds) — each half-round joins the
-    * copy partitioned on its JOIN key, so the edge table never
-    * re-shuffles, and the cross-key aggregate relies on map-side
-    * partial aggregation to shrink its exchange to node-sized
-    * partials. (r13 fix, guide §2.4/§3.1: the previous orientation
-    * joined the copy partitioned on the AGGREGATION key, betting the
-    * node-score side would broadcast; scores descend from
-    * localCheckpoint RDDs with unknown size stats, so the planner
-    * chose a sort-merge join and re-shuffled the 4.7 MB edge copy
-    * every half-round — and AQE then coalesced the join's reduce to
-    * ONE 900 ms task. Joining on the partition key removes the edge
-    * exchange under EVERY strategy the planner can pick; only the
-    * node-sized score table ever shuffles.) Built once per (session,
-    * dataset). */
-  private val hitsIndexCache =
-    new graft.SessionCache[(DataFrame, DataFrame)](v => {
-      v._1.unpersist(); v._2.unpersist(); ()
-    })
-
-  private def hitsIndex(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    hitsIndexCache.getOrCompute(s, d) {
-      val cs = csIndex(s, d)
-      (cs.repartition(col("sk")).persist(),
-        cs.repartition(col("c")).persist())
-    }
-
   def graphHits(s: SparkSession, d: String): DataFrame = {
-    val (csBySk, csByC) = hitsIndex(s, d)
+    val (csBySk, csByC) = index(s, d).hits
     // FP determinism via the exact-DECIMAL idiom (the graph_linkpred
     // convention): max-normalized scores live in [0, 1], so the 1e-15
     // quantization grid keeps 15 significant digits on every score and
@@ -1417,14 +1284,14 @@ object GraphOps {
     *
     * ONE pass computes all five thresholds: the edge list joins the
     * node-sized degree table on both endpoints once (reusing the
-    * memoized [[edgeIndex]] partitioning), then per-threshold counts
+    * index's edge partitioning), then per-threshold counts
     * are CONDITIONAL SUMS in a single 1-row aggregate — no per-k
     * subgraph materialization, no loop. The directed edge count IS
     * E_k·2 on a symmetric list, matching the ordered-pair denominator
     * exactly. Exact integers; φ is one division, round 6. */
   def graphRichClub(s: SparkSession, d: String): DataFrame = {
     val ks = Seq(2, 4, 8, 16, 32)
-    val (edgesDeg, deg, _) = edgeIndex(s, d)
+    val (edgesDeg, deg, _) = index(s, d).edges
     val dd = deg.select(col("src").as("dst"), col("outdeg").as("indeg"))
     val ej = edgesDeg.join(dd, Seq("dst"))
     val edgeSums = ej.agg(ks.map(k =>
@@ -1451,10 +1318,10 @@ object GraphOps {
 
   /** One-row graph profile — the summary panel every graph service
     * exposes: node/edge counts per side, density, average and maximum
-    * degree. Reads the memoized [[edgeIndex]] degree table only
+    * degree. Reads the index's degree table only
     * (node-sized; the edge list is never rescanned), one aggregate. */
   def graphSummary(s: SparkSession, d: String): DataFrame = {
-    val (_, deg, _) = edgeIndex(s, d)
+    val (_, deg, _) = index(s, d).edges
     deg.agg(
         count(lit(1)).as("n_nodes"),
         sum(when(col("src").startsWith("c"), 1L).otherwise(0L))
@@ -1486,7 +1353,7 @@ object GraphOps {
     * oracle-pinning collect_list fold. One edges⋈scores join + one
     * agg per round over the memoized index; top-20 by score. */
   def graphKatz(s: SparkSession, d: String): DataFrame = {
-    val (edgesDeg, deg, _) = edgeIndex(s, d)
+    val (edgesDeg, deg, _) = index(s, d).edges
     val edges = edgesDeg.select(col("src"), col("dst"))
     val nodes = deg.select(col("src").as("node"))
     var k = nodes.withColumn("kx", lit(512L))

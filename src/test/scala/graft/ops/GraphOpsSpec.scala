@@ -2,6 +2,8 @@ package graft.ops
 
 import graft.SparkFunSuite
 import java.nio.file.Files
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
 /** Semantic properties of graph_pagerank on a hand-checkable star
   * graph (the catalog row proves engine-vs-oracle agreement; this
@@ -173,6 +175,24 @@ class GraphOpsSpec extends SparkFunSuite {
     val got = GraphOps.graphTriangles(spark, d).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L))
+  }
+
+  test("SessionCache.evictAll releases every block the graph index pinned") {
+    GraphOps.queries.values.foreach(q => q(spark, sfDir).collect())
+    val arts = GraphOps.indexArtifacts(spark, sfDir)
+    val leaves = arts.flatMap(_.queryExecution.logical.collect {
+      case l: LogicalRDD => l.rdd.id
+    })
+    // every artifact is built: 8 persisted frames, 8 checkpointed ones
+    assert(arts.size == 16)
+    assert(arts.count(_.storageLevel != StorageLevel.NONE) == 8)
+    assert(leaves.toSet.subsetOf(spark.sparkContext.getPersistentRDDs.keySet))
+    graft.SessionCache.evictAll()
+    assert(arts.forall(_.storageLevel == StorageLevel.NONE),
+      "an artifact frame is still in the cache manager")
+    val live = spark.sparkContext.getPersistentRDDs.keySet
+    assert(leaves.nonEmpty && !leaves.exists(live.contains),
+      "an RDD under an artifact's LogicalRDD leaf is still persisted")
   }
 
   test("degree distribution of the star: two degree-1 customers, one degree-2 hub") {

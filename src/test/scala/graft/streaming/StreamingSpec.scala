@@ -17,6 +17,22 @@ class StreamingSpec extends SparkFunSuite {
       .select(col("event_id").as("doc_id"), col("user_id"),
         col("event_type"), col("value"))
 
+  test("funnel_stream_eq never changes the caller's shuffle width while it runs") {
+    val before = spark.conf.get("spark.sql.shuffle.partitions")
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val running = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val sampler = new Thread(() => while (running.get()) {
+      seen.add(spark.conf.get("spark.sql.shuffle.partitions"))
+      Thread.sleep(1)
+    })
+    sampler.start()
+    val row = try graft.ops.StreamOps.funnelStreamEq(spark, sfDir).collect().head
+    finally { running.set(false); sampler.join() }
+    assert(row.getBoolean(4) && row.getBoolean(5)) // keepers + copies
+    assert(seen.contains(before) && seen.size == 1,
+      s"the session's shuffle width moved: $seen")
+  }
+
   test("AvailableNow stream over parquet == one-shot batch") {
     val tmp = Files.createTempDirectory("stream").toString
     // copy events into a multi-file source dir so several micro-batches
