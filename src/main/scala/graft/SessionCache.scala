@@ -22,11 +22,6 @@ import org.apache.spark.sql.SparkSession
   */
 final class SessionCache[V](onEvict: V => Unit = (_: V) => ()) {
 
-  // every instance is a module-level val; the registry lets the bench's
-  // cold-path witness (SPARK_GRAFT_COLD=1) evict EVERY memo between
-  // timed queries so warm-laundered index builds are measurable
-  SessionCache.register(this)
-
   // The map stores a MEMO CELL, not the built value: computeIfAbsent
   // must stay short (CHM holds the bin lock through the mapping
   // function, so building a cluster-scale index inside it would
@@ -42,6 +37,13 @@ final class SessionCache[V](onEvict: V => Unit = (_: V) => ()) {
   }
 
   private val m = new ConcurrentHashMap[String, Cell]()
+
+  // every instance is a module-level val; the registry lets the bench's
+  // cold-path witness (SPARK_GRAFT_COLD=1) evict EVERY memo between
+  // timed queries so warm-laundered index builds are measurable.
+  // Registered only once `m` exists: another thread's evictAll may
+  // reach this instance as soon as it is in the registry.
+  SessionCache.register(this)
 
   def getOrCompute(s: SparkSession, dataset: String)(f: => V): V = {
     sweep()

@@ -14,7 +14,8 @@ import graft.io.BucketedParquet
   *  - batch rows are deduped on the key (last-writer-wins inside a
   *    batch, like consecutive UNWIND rows hitting the same node);
   *  - existing rows keep their `uuid`, incoming property values
-  *    overwrite (`SET` on every match); missing/new keys insert;
+  *    overwrite (`SET` on every match), properties the batch does not
+  *    carry keep their stored values; missing/new keys insert;
   *  - `ON CREATE SET uuid` — the uuid is minted only on first insert.
   *    It is derived deterministically from the identity key (md5-based
   *    UUIDv3-style) instead of a random apoc uuid, which preserves the
@@ -23,10 +24,11 @@ import graft.io.BucketedParquet
   *
   * MERGE and DETACH DELETE go through [[BucketedParquet]]'s keyed
   * read-merge-swap path (`merge`, `deleteKeys`); see its doc for the
-  * layout and what a batch rewrites.
+  * layout, what a batch rewrites and its jobs per write.
   */
 final class GraphStore(spark: SparkSession, baseDir: String,
     numBuckets: Int = 16) {
+  import BucketedParquet.{New, Old}
 
   private def vertexDir(label: String) = s"$baseDir/vertices/$label"
   private def edgeDir(tpe: String) = s"$baseDir/edges/$tpe"
@@ -50,41 +52,31 @@ final class GraphStore(spark: SparkSession, baseDir: String,
   def readEdges(tpe: String): Option[DataFrame] =
     BucketedParquet.readAll(spark, edgeDir(tpe))
 
-  /** MERGE semantics on a keyed table; see class doc. */
+  /** MERGE semantics on a keyed table; see class doc. Columns: the
+    * batch's, the uuid, then those only stored. The uuid is computed
+    * from the key after the shuffle, so the batch never carries it. */
   private def mergeInto(dir: String, keyCols: Seq[String], batch: DataFrame,
       uuidCol: Column): Unit =
-    BucketedParquet.merge(spark, dir, keyCols,
-      BucketedParquet.dedupLastWins(batch, keyCols).withColumn("uuid", uuidCol),
-      numBuckets) {
-      case (None, deduped) => deduped
-      case (Some(old), deduped) =>
-        val propCols = deduped.columns.filterNot(keyCols.contains).toSeq
-        val oldRenamed = old.select(
-          (keyCols.map(col) ++
-            old.columns.filterNot(keyCols.contains)
-              .map(c => col(c).as(s"__old_$c"))): _*)
-        val joined = deduped.join(oldRenamed, keyCols, "full_outer")
-        // SET-on-match: incoming value wins when the batch row exists;
-        // the uuid keeps the OLD value when present (ON CREATE only)
-        val outCols = keyCols.map(col) ++ propCols.map { c =>
-          val oldC = s"__old_$c"
-          if (c == "uuid")
-            (if (old.columns.contains("uuid"))
-              coalesce(col(oldC), col(c)) else col(c)).as("uuid")
-          else if (old.columns.contains(c))
-            when(col("uuid").isNotNull, col(c)) // batch row present
-              .otherwise(col(oldC)).as(c)
-          else col(c).as(c)
-        }
-        joined.select(outCols: _*)
+    BucketedParquet.merge(spark, dir, keyCols, batch.drop("uuid"),
+      numBuckets) { (oldF, newF) =>
+      val props = newF.fieldNames.toSeq.map { c =>
+        // SET on match: the batch row's value wins when it has one
+        if (oldF.fieldNames.contains(c))
+          when(New.isNotNull, New(c)).otherwise(Old(c)).as(c)
+        else New(c).as(c)
+      }
+      // ON CREATE: the uuid keeps the stored value
+      val uuid = (if (oldF.fieldNames.contains("uuid"))
+        coalesce(Old("uuid"), uuidCol) else uuidCol).as("uuid")
+      val storedOnly = oldF.fieldNames.toSeq
+        .filterNot(c => c == "uuid" || newF.fieldNames.contains(c))
+      (props :+ uuid) ++ storedOnly.map(c => Old(c).as(c))
     }
 
   /** MERGE a vertex batch: `batch` columns = keyCols ++ props. */
   def mergeVertices(label: String, keyCols: Seq[String],
       batch: DataFrame): Unit =
-    mergeInto(vertexDir(label), keyCols,
-      batch.withColumn("uuid", lit(null).cast("string")).drop("uuid"),
-      keyUuid(keyCols, "v", label))
+    mergeInto(vertexDir(label), keyCols, batch, keyUuid(keyCols, "v", label))
 
   /** MERGE an edge batch; identity = the endpoint keys (+ any identity
     * props like `subtype`/`linkage_id` included in keyCols). */

@@ -1,8 +1,14 @@
 package graft.io
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
+import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
 import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Hash-bucketed parquet layout of the keyed stores
   * ([[graft.graph.GraphStore]] vertex and edge tables, [[DocStore]]
@@ -10,29 +16,47 @@ import java.nio.file.{Files, Path, Paths}
   * this object knows the layout; the stores supply merge rules.
   *
   * Layout: a table is a directory of `__bucket=K` subdirectories with
-  * K = murmur3(normalized key strings) % N. The first write records
-  * the key columns (`_BUCKET_KEY`) and N (`_NUM_BUCKETS`); from then on
-  * the stored N is authoritative over the caller's `numBuckets`, so a
-  * store reopened with another count still merges against the right
-  * directories. Buckets written at different times may carry different
-  * column sets, so every read merges schemas.
+  * K = murmur3(normalized key strings) % N, one file per bucket. The
+  * first write records the key columns (`_BUCKET_KEY`) and N
+  * (`_NUM_BUCKETS`); from then on the stored N is authoritative over
+  * the caller's `numBuckets`, so a store reopened with another count
+  * still merges against the right directories. Buckets written at
+  * different times may carry different column sets. A read's schema is
+  * merged on the driver from the Spark row schema in the footers of the
+  * buckets it reads, in path order as a `mergeSchema` read merges them,
+  * so building a read starts no Spark job.
   *
-  * Writes ([[merge]], [[deleteKeys]]) find the buckets a batch touches
-  * (a collect of at most N ids), read only those through partition
-  * pruning, and swap only those directories in through a staging dir
-  * and a journal ([[recover]]); every other bucket's files stay
-  * byte-identical. Rows are repartitioned on the bucket id, so a bucket
-  * is one file per write.
+  * [[merge]] runs three Spark jobs per write: the batch is persisted
+  * with each row's arrival order, one shuffle-free job collects the
+  * bucket ids its keys hash into, and the touched buckets' stored rows
+  * are unioned with the batch, repartitioned on the bucket id (the
+  * shuffle-map job), grouped per (bucket, key) by the store's rule and
+  * written partitioned by bucket with no further exchange (the write
+  * job). Last-wins on arrival order inside the group dedupes the batch;
+  * a stored column whose type matches the batch's shares its slot in
+  * the shuffled row. Writes ([[merge]], [[deleteKeys]]) read only the
+  * touched buckets (partition pruning) and swap only those directories
+  * in through a staging dir and a journal ([[recover]]); every other
+  * bucket's files stay byte-identical.
   *
   * Cost: a batch of k distinct keys touches about N·(1−(1−1/N)^k) of a
   * table's N buckets, so a rewrite is batch-sized only when k ≪ N; as k
   * nears N it rewrites nearly the whole table. With N = 16, a 108-line
   * late-contribution batch into the FEC stores rewrote 188 of their 192
-  * buckets.
+  * buckets. The three jobs are a fixed cost per table write whatever
+  * the batch size, so a small batch into many tables is bound by job
+  * scheduling, not by its data.
   */
 object BucketedParquet {
 
   val B = "__bucket"
+  private val Ord = "__ord"
+
+  /** In a [[merge]] rule: the key's stored row (null when it has none)
+    * and the batch's last row for it (null when the batch has none),
+    * each a struct of the non-key columns. */
+  val Old: Column = col("__old")
+  val New: Column = col("__new")
 
   private def exists(dir: String): Boolean = Files.exists(Paths.get(dir))
 
@@ -50,23 +74,59 @@ object BucketedParquet {
       numBuckets: Int): Seq[Int] =
     bucketIds(df.select(bucketOf(keyCols, numBuckets).as(B)))
 
+  /** The distinct values of `df`'s bucket column: a set per partition,
+    * merged on the driver, so no shuffle. */
   private def bucketIds(df: DataFrame): Seq[Int] =
-    df.select(col(B)).distinct().collect().map(_.getInt(0)).toSeq.sorted
+    df.select(col(B)).as(Encoders.scalaInt)
+      .mapPartitions(ids => ids.toSet.iterator)(Encoders.scalaInt)
+      .collect().distinct.sorted.toSeq
 
-  /** The whole table with its bucket ids. */
-  private def scan(spark: SparkSession, dir: String): Option[DataFrame] = {
-    recover(dir)
-    if (exists(dir)) Some(spark.read.option("mergeSchema", "true").parquet(dir))
-    else None
+  /** The Spark row schema of `dir`'s buckets (those in `only`, or all),
+    * merged from their files' footers, or None when they hold no file. */
+  private def footerSchema(spark: SparkSession, dir: String,
+      only: Option[Seq[Int]]): Option[StructType] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val bucketDirs = only match {
+      case Some(ks) => ks.map(k => Paths.get(s"$dir/$B=$k"))
+      case None => Files.list(Paths.get(dir)).iterator().asScala.toSeq
+        .filter(_.getFileName.toString.startsWith(s"$B="))
+    }
+    val files = bucketDirs.filter(Files.isDirectory(_)).flatMap { d =>
+      Files.list(d).iterator().asScala.toSeq.filterNot { f =>
+        val n = f.getFileName.toString
+        n.startsWith(".") || n.startsWith("_")
+      }
+    }.sortBy(_.toUri.toString)
+    // every bucket file is written by Spark, which records its row
+    // schema in the footer
+    val schemas = files.map { f =>
+      val reader = ParquetFileReader.open(conf, new HPath(f.toUri))
+      try DataType.fromJson(reader.getFooter.getFileMetaData
+          .getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+        .asInstanceOf[StructType]
+      finally reader.close()
+    }
+    schemas.reduceOption(PlanBridge.mergeSchemas)
   }
 
-  def readAll(spark: SparkSession, dir: String): Option[DataFrame] =
-    scan(spark, dir).map(_.drop(B))
+  /** The table's buckets (those in `only`, or all) with their bucket
+    * ids, or None before the table's first write or when they hold no
+    * file. */
+  private def scan(spark: SparkSession, dir: String,
+      only: Option[Seq[Int]] = None): Option[DataFrame] = {
+    recover(dir)
+    if (!exists(dir)) None
+    else footerSchema(spark, dir, only).map { s =>
+      val df = spark.read.schema(s.add(StructField(B, IntegerType))).parquet(dir)
+      only.fold(df)(ks => df.filter(col(B).isin(ks.map(Integer.valueOf): _*)))
+    }
+  }
 
-  /** Only the given buckets, with their bucket ids. */
-  private def readBuckets(spark: SparkSession, dir: String,
-      buckets: Seq[Int]): Option[DataFrame] =
-    scan(spark, dir).map(_.filter(col(B).isin(buckets.map(Integer.valueOf): _*)))
+  /** The whole table, None before its first write; a table whose
+    * buckets hold no file reads as no rows and no columns. */
+  def readAll(spark: SparkSession, dir: String): Option[DataFrame] =
+    if (!exists(dir)) None
+    else Some(scan(spark, dir).fold(spark.emptyDataFrame)(_.drop(B)))
 
   /** The stored bucket count, or `default` before the first write. */
   private def layoutBuckets(dir: String, default: Int): Int = {
@@ -80,18 +140,6 @@ object BucketedParquet {
     if (Files.exists(p)) Some(Files.readString(p).split(",").toSeq) else None
   }
 
-  /** The last row per key in batch order, as consecutive bulk-API or
-    * UNWIND rows hitting one key would leave it: a max_by hash
-    * aggregate, one shuffle and no per-key sort. */
-  def dedupLastWins(batch: DataFrame, keyCols: Seq[String]): DataFrame = {
-    val props = batch.columns.filterNot(keyCols.contains).toSeq
-    if (props.isEmpty) batch.dropDuplicates(keyCols)
-    else batch.withColumn("__ord", monotonically_increasing_id())
-      .groupBy(keyCols.map(col): _*)
-      .agg(max_by(struct(props.map(col): _*), col("__ord")).as("__s"))
-      .select(keyCols.map(col) ++ props.map(c => col(s"__s.$c").as(c)): _*)
-  }
-
   /** The stored keys in the buckets that `candidates`' keys hash into:
     * a membership probe that reads no other bucket. */
   def storedKeys(spark: SparkSession, dir: String, keyCols: Seq[String],
@@ -99,26 +147,51 @@ object BucketedParquet {
     val keys = keyCols.map(col)
     val buckets = touchedBuckets(candidates.select(keys: _*), keyCols,
       layoutBuckets(dir, numBuckets))
-    readBuckets(spark, dir, buckets).getOrElse(candidates.limit(0))
+    scan(spark, dir, Some(buckets)).getOrElse(candidates.limit(0))
       .select(keys: _*)
   }
 
-  /** Keyed read-modify-write: `combine(stored, batch)` gets the stored
-    * rows of the buckets `batch`'s keys hash into (None before the
-    * table's first write) and returns every row those buckets keep;
-    * only they are swapped in. `batch` is persisted for its two
-    * evaluations and released before returning. */
+  /** Keyed read-modify-write in three jobs (see the class doc). Per key
+    * of the touched buckets, `rule(oldFields, newFields)` gives the
+    * non-key columns the key keeps, over [[Old]] and [[New]] (structs of
+    * `oldFields` and `newFields`; `oldFields` is empty before the
+    * table's first write); a key whose rule yields all-null columns is
+    * still kept. `batch` is persisted for its two evaluations and
+    * released before returning. */
   def merge(spark: SparkSession, dir: String, keyCols: Seq[String],
       batch: DataFrame, numBuckets: Int)(
-      combine: (Option[DataFrame], DataFrame) => DataFrame): Unit = {
-    val b = batch.persist()
+      rule: (StructType, StructType) => Seq[Column]): Unit = {
+    val n = layoutBuckets(dir, numBuckets)
+    val keys = keyCols.map(col)
+    val bucket = bucketOf(keyCols, n)
+    val props = batch.columns.filterNot(keyCols.contains).toSeq
+    val b = batch.select(keys ++ (monotonically_increasing_id().as(Ord) +:
+      props.map(col)): _*).persist()
     try {
-      val n = layoutBuckets(dir, numBuckets)
-      val touched = touchedBuckets(b, keyCols, n)
+      val touched = bucketIds(b.select(bucket.as(B)))
       if (touched.nonEmpty) {
-        val merged = combine(readBuckets(spark, dir, touched).map(_.drop(B)), b)
-        writeBuckets(dir, merged.withColumn(B, bucketOf(keyCols, n)),
-          touched, keyCols, n)
+        val newFields = StructType(props.map(b.schema(_)))
+        val stored = scan(spark, dir, Some(touched))
+        val oldFields = StructType(stored.toSeq.flatMap(_.schema.fields)
+          .filterNot(f => f.name == B || keyCols.contains(f.name)))
+        // a stored column shares the batch column's slot when their
+        // types agree, so a shuffled row carries each value once
+        def slot(f: StructField) =
+          if (newFields.exists(n => n.name == f.name &&
+            n.dataType.catalogString == f.dataType.catalogString)) f.name
+          else s"__old_${f.name}"
+        val rows = stored.fold(b)(_.select(keys ++
+            (lit(null).cast("long").as(Ord) +:
+              oldFields.map(f => col(f.name).as(slot(f)))): _*)
+          .unionByName(b, allowMissingColumns = true))
+        val merged = rows.repartition(bucket).withColumn(B, bucket)
+          .groupBy(col(B) +: keys: _*)
+          .agg(first(when(col(Ord).isNull,
+              struct(oldFields.map(f => col(slot(f)).as(f.name)): _*)),
+              ignoreNulls = true).as("__old"),
+            max_by(struct(props.map(col): _*), col(Ord)).as("__new"))
+          .select((col(B) +: keys) ++ rule(oldFields, newFields): _*)
+        writeBuckets(dir, merged, touched, keyCols, n)
       }
     } finally b.unpersist()
   }
@@ -139,14 +212,14 @@ object BucketedParquet {
       if (layoutKey(dir).contains(matchCols)) {
         val candidates = touchedBuckets(keys, matchCols, n)
         if (candidates.isEmpty) return
-        readBuckets(spark, dir, candidates)
+        scan(spark, dir, Some(candidates))
       } else scan(spark, dir)
     stored.foreach { old =>
       val hit = bucketIds(old.join(keys, matchCols, "left_semi"))
       if (hit.nonEmpty)
         writeBuckets(dir,
           old.filter(col(B).isin(hit.map(Integer.valueOf): _*))
-            .join(keys, matchCols, "left_anti"),
+            .join(keys, matchCols, "left_anti").repartition(col(B)),
           hit, matchCols, n)
     }
   }
@@ -190,14 +263,14 @@ object BucketedParquet {
   }
 
   /** Stage the touched buckets, then swap ONLY their directories in.
-    * `rows` must carry the bucket-id column [[B]]; `keyCols` and
-    * `numBuckets` are recorded when the table is created. */
+    * `rows` must carry the bucket-id column [[B]] and be partitioned on
+    * it, so each bucket is one file; `keyCols` and `numBuckets` are
+    * recorded when the table is created. */
   private def writeBuckets(dir: String, rows: DataFrame, touched: Seq[Int],
       keyCols: Seq[String], numBuckets: Int): Unit = {
     recover(dir)
     val staging = dir + ".staging"
-    rows.repartition(col(B))
-      .write.mode("overwrite").partitionBy(B).parquet(staging)
+    rows.write.mode("overwrite").partitionBy(B).parquet(staging)
     if (!exists(dir)) {
       Files.move(Paths.get(staging), Paths.get(dir))
       Files.writeString(Paths.get(s"$dir/_BUCKET_KEY"), keyCols.mkString(","))

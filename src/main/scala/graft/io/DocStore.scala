@@ -2,7 +2,7 @@ package graft.io
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Keyed document store over Parquet with the reference's ES write
   * modes (SURVEY K1/K2):
@@ -19,14 +19,15 @@ import org.apache.spark.sql.types.StructType
   *  - `insertNew`: the `es.exists` insert-only guard;
   *  - `delete`: delete-by-key.
   *
-  * Every mode is a merge rule over [[BucketedParquet]]'s keyed
-  * read-merge-swap path (see its doc for the layout and what a batch
-  * rewrites); batch rows are deduped last-writer-wins on the key. The
-  * conflict-retry machinery of the reference dissolves — a batch merge
-  * has no concurrent writers.
+  * Every mode is a per-key merge rule over [[BucketedParquet]]'s keyed
+  * read-merge-swap path (see its doc for the layout, what a batch
+  * rewrites and its jobs per write); batch rows are deduped
+  * last-writer-wins on the key. The conflict-retry machinery of the
+  * reference dissolves — a batch merge has no concurrent writers.
   */
 final class DocStore(spark: SparkSession, baseDir: String,
     numBuckets: Int = 16) {
+  import BucketedParquet.{New, Old}
 
   private def dir(index: String) = s"$baseDir/$index"
 
@@ -40,18 +41,19 @@ final class DocStore(spark: SparkSession, baseDir: String,
     BucketedParquet.storedKeys(spark, dir(indexName), Seq(key), candidates,
       numBuckets)
 
-  private def mergeDeduped(index: String, key: String, batch: DataFrame)(
-      combine: (Option[DataFrame], DataFrame) => DataFrame): Unit =
-    BucketedParquet.merge(spark, dir(index), Seq(key),
-      BucketedParquet.dedupLastWins(batch, Seq(key)), numBuckets)(combine)
+  private def merge(index: String, key: String, batch: DataFrame)(
+      rule: (StructType, StructType) => Seq[Column]): Unit =
+    BucketedParquet.merge(spark, dir(index), Seq(key), batch, numBuckets)(rule)
 
-  /** K1: overwrite-by-id. */
+  /** K1: overwrite-by-id: a batch row replaces the stored row whole. */
   def index(indexName: String, key: String, batch: DataFrame): Unit =
-    mergeDeduped(indexName, key, batch) {
-      case (None, deduped) => deduped
-      case (Some(old), deduped) =>
-        old.join(deduped.select(col(key)), Seq(key), "left_anti")
-          .unionByName(deduped, allowMissingColumns = true)
+    merge(indexName, key, batch) { (oldF, newF) =>
+      (oldF.fieldNames ++ newF.fieldNames.filterNot(oldF.fieldNames.contains))
+        .toSeq.map { c =>
+          if (!newF.fieldNames.contains(c)) when(New.isNull, Old(c)).as(c)
+          else if (!oldF.fieldNames.contains(c)) New(c).as(c)
+          else when(New.isNotNull, New(c)).otherwise(Old(c)).as(c)
+        }
     }
 
   /** The reference's `es.exists` guard as a set operation: index ONLY
@@ -61,15 +63,30 @@ final class DocStore(spark: SparkSession, baseDir: String,
     * rows, pinned with a localCheckpoint because the caller consumes
     * them AFTER the swap has replaced the files the anti-join read. */
   def insertNew(indexName: String, key: String, batch: DataFrame): DataFrame = {
-    val deduped = BucketedParquet.dedupLastWins(batch, Seq(key))
+    val deduped = lastWins(batch, key)
     val fresh = deduped
       .join(storedKeys(indexName, key, deduped), Seq(key), "left_anti")
       .localCheckpoint(true)
-    BucketedParquet.merge(spark, dir(indexName), Seq(key), fresh, numBuckets) {
-      case (None, f) => f
-      case (Some(old), f) => old.unionByName(f, allowMissingColumns = true)
+    merge(indexName, key, fresh) { (oldF, newF) =>
+      (oldF.fieldNames ++ newF.fieldNames.filterNot(oldF.fieldNames.contains))
+        .toSeq.map { c =>
+          if (!newF.fieldNames.contains(c)) Old(c).as(c)
+          else if (!oldF.fieldNames.contains(c)) New(c).as(c)
+          else when(Old.isNotNull, Old(c)).otherwise(New(c)).as(c)
+        }
     }
     fresh
+  }
+
+  /** The last row per key in batch order, key first: `insertNew`'s
+    * result, which must name the rows it inserts before the merge runs. */
+  private def lastWins(batch: DataFrame, key: String): DataFrame = {
+    val props = batch.columns.filterNot(_ == key).toSeq
+    if (props.isEmpty) batch.dropDuplicates(key)
+    else batch.withColumn("__ord", monotonically_increasing_id())
+      .groupBy(col(key))
+      .agg(max_by(struct(props.map(col): _*), col("__ord")).as("__s"))
+      .select(col(key) +: props.map(c => col(s"__s.$c").as(c)): _*)
   }
 
   /** Delete-by-key — the `es.delete` drain of a deletion queue
@@ -81,58 +98,44 @@ final class DocStore(spark: SparkSession, baseDir: String,
     BucketedParquet.deleteKeys(spark, dir(indexName), Seq(key),
       ids.select(col(key)).distinct().localCheckpoint(true), numBuckets)
 
-  /** K2: doc_as_upsert partial merge; see class doc. */
+  /** K2: doc_as_upsert partial merge; see class doc. Columns: the
+    * batch's, then those only stored. */
   def upsert(indexName: String, key: String, batch: DataFrame): Unit =
-    mergeDeduped(indexName, key, batch) {
-      case (None, deduped) => deduped
-      case (Some(old), deduped) =>
-        val newCols = deduped.columns.filterNot(_ == key).toSeq
-        val oldCols = old.columns.filterNot(_ == key).toSeq
-        val oldR = old.select(col(key) +: oldCols.map(c => col(c).as(s"__old_$c")): _*)
-        val newR = deduped.select(col(key) +:
-          (newCols.map(c => col(c).as(s"__new_$c")) :+ lit(1).as("__present")): _*)
-        val joined = newR.join(oldR, Seq(key), "full_outer")
-        val allCols = (newCols ++ oldCols.filterNot(newCols.contains)).distinct
-        val out = allCols.map { c =>
-          val hasNew = newCols.contains(c)
-          val hasOld = oldCols.contains(c)
-          if (hasNew && hasOld)
-            mergeField(joined, c).as(c)
-          else if (hasNew) col(s"__new_$c").as(c)
-          else col(s"__old_$c").as(c)
+    merge(indexName, key, batch) { (oldF, newF) =>
+      (newF.fieldNames ++ oldF.fieldNames.filterNot(newF.fieldNames.contains))
+        .toSeq.map { c =>
+          if (!oldF.fieldNames.contains(c)) New(c).as(c)
+          else if (!newF.fieldNames.contains(c)) Old(c).as(c)
+          else mergeField(c, newF(c).dataType, oldF(c).dataType).as(c)
         }
-        joined.select(col(key) +: out: _*)
     }
 
   /** Field merge: struct → field-wise coalesce(new, old) one level
     * deep; scalar → new when the batch row carries a non-null value. */
-  private def mergeField(joined: DataFrame, c: String): Column = {
-    val n = col(s"__new_$c"); val o = col(s"__old_$c")
-    joined.schema(s"__new_$c").dataType match {
-      case st: StructType =>
-        val oldSt = joined.schema(s"__old_$c").dataType.asInstanceOf[StructType]
+  private def mergeField(c: String, newType: DataType,
+      oldType: DataType): Column = {
+    val n = New(c); val o = Old(c)
+    (newType, oldType) match {
+      case (st: StructType, oldSt: StructType) =>
         val fields = (st.fieldNames ++
           oldSt.fieldNames.filterNot(st.fieldNames.contains)).distinct
         def fieldType(f: String) =
           st.fields.find(_.name == f).map(_.dataType)
             .getOrElse(oldSt(f).dataType)
+        def field(src: Column, s: StructType, f: String) =
+          if (s.fieldNames.contains(f)) src.getField(f)
+          else lit(null).cast(fieldType(f))
         // every branch must carry the SAME widened struct type: a
         // partial doc (fewer fields) pads its missing fields with
         // typed nulls (the ES partial update never narrows the doc)
-        def widen(src: Column, s: StructType) = struct(fields.map { f =>
-          (if (s.fieldNames.contains(f)) src.getField(f)
-           else lit(null).cast(fieldType(f))).as(f)
-        }: _*)
+        def widen(src: Column, s: StructType) =
+          struct(fields.map(f => field(src, s, f).as(f)): _*)
         val mergedStruct = struct(fields.map { f =>
-          val nf = if (st.fieldNames.contains(f)) n.getField(f)
-            else lit(null).cast(fieldType(f))
-          val of = if (oldSt.fieldNames.contains(f)) o.getField(f)
-            else lit(null).cast(fieldType(f))
-          coalesce(nf, of).as(f)
+          coalesce(field(n, st, f), field(o, oldSt, f)).as(f)
         }: _*)
         when(n.isNotNull && o.isNotNull, mergedStruct)
           .when(n.isNotNull, widen(n, st)).otherwise(widen(o, oldSt))
-      case _ => when(col("__present").isNotNull, coalesce(n, o)).otherwise(o)
+      case _ => when(New.isNotNull, coalesce(n, o)).otherwise(o)
     }
   }
 }
